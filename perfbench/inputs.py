@@ -58,18 +58,38 @@ def cached(name: str, build) -> Path:
 # crawl slice
 # ---------------------------------------------------------------------------
 
-def crawl_pages_path(seed: int, n: int, dup_every: int) -> Path:
+NEAR_SUFFIX = "/mirror"
+
+
+def near_twin(i: int, base: dict) -> dict:
+    """A near-duplicate of page ``i`` under its own url: the text with
+    its first line repeated at the end. The bytes differ, so exact dedup
+    keeps both, but the word set is the same, so the pair has Jaccard
+    1.0 and near-dup detection must drop the twin (its url sorts after
+    the original's)."""
+    from lgid_spark import datagen as D
+
+    text = base["text"] + "\n" + base["text"].split("\n", 1)[0]
+    return dict(base, url=base["url"] + NEAR_SUFFIX, text=text,
+                html=D.html_for(i, text),
+                warc_ts=base["warc_ts"] + dt.timedelta(hours=2))
+
+
+def crawl_pages_path(seed: int, n: int, dup_every: int = 0,
+                     near_every: int = 0) -> Path:
     """Parquet web_pages slice: base pages ``seed*n .. seed*n+n-1`` plus
-    a messy-url exact twin of every ``dup_every``-th page (none when
-    ``dup_every`` is 0). Generated in this process, so making the input
-    never runs a Spark job that would warm the session."""
+    a messy-url exact twin of every ``dup_every``-th page and a
+    near-duplicate twin (see :func:`near_twin`) of every
+    ``near_every``-th page, offset by one; 0 turns either off.
+    Generated in this process, so making the input never runs a Spark
+    job that would warm the session."""
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from lgid_spark import datagen as D
 
-    name = (f"crawl-s{seed}-n{n}-d{dup_every}-"
+    name = (f"crawl-s{seed}-n{n}-d{dup_every}-nd{near_every}-"
             f"{source_hash(_INPUT_SOURCES)}")
 
     def build(tmp: Path) -> None:
@@ -81,6 +101,8 @@ def crawl_pages_path(seed: int, n: int, dup_every: int) -> Path:
                 rows.append(dict(
                     base, url=D.messy_url_for(i),
                     warc_ts=base["warc_ts"] + dt.timedelta(hours=1)))
+            if near_every and i % near_every == 1:
+                rows.append(near_twin(i, base))
         df = pd.DataFrame(rows, columns=D.WEB_PAGES_COLUMNS)
         tmp.mkdir()
         # several files, as a crawl dump has: the scan splits across cores

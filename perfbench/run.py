@@ -3,7 +3,7 @@
 Run from the repository root:
 
     python3 perfbench/run.py --workload fresh_crawl --seed 1 \\
-        --seconds 5 --trace 0
+        --seconds 10 --trace 0
 
 Workloads (see ``workloads.py``): ``fresh_crawl`` and ``crash_resume``,
 the two in BENCHMARK.json, and ``igt_classify``.
@@ -12,23 +12,29 @@ The engine runs on ``local[<cores>]`` with the shipped
 
 One run:
 
-1. set-up, three times: session start plus a first tiny UDF job — one
-   cold JVM start and two SparkContext restarts; ``setup_s`` is the
-   median. Input generation is not part of it.
+1. set-up: a cold JVM start, the session and a first tiny UDF job,
+   once (``setup_s``). Each costs about 14 s on a 4-core host, so
+   repeating it would leave no time for the job within the run
+   budget. Input generation is not part of it.
 2. untimed preparation: seeded inputs (cached under ``.bench_cache``)
-   and, for ``crash_resume``, the uninterrupted reference run.
-3. timed repetitions until ``--seconds`` have passed (at least the
-   workload's minimum), each checked. With ``--trace 1`` then one more
-   untraced repetition and one traced repetition, whose spans give the
-   per-layer metrics; ``trace.overhead_s`` is the traced job's time
-   minus that untraced one's.
-4. the full correctness gate on the last repetition's output.
+   and, for ``crash_resume``, the uninterrupted reference run, which
+   also warms the session.
+3. with ``--trace 0``: timed repetitions until ``--seconds`` have
+   passed, each checked. With ``--trace 1``: one repetition whose job
+   and re-run each run in a Spark job group, so the status stores give
+   the counters of the program's own plan; then the job decomposed
+   into its public calls, one span each, for the per-layer times
+   (``trace.overhead_s`` is the decomposed job's time minus the
+   untraced one's); then the workload's probe of the layers its job
+   does not use.
+4. the full correctness gate on the last untraced repetition's output.
 
 Every metric is printed as ``metric <name> <value> <unit> n=<samples>``;
 the last line is one JSON object with the keys ``correct``,
 ``attempted``, ``failed`` and ``metrics`` (end-to-end metrics with
-``--trace 0``, per-layer metrics with ``--trace 1``). The exit code is
-0 only when every check passed, and 2 when the engine is missing.
+``--trace 0``, per-layer metrics with ``--trace 1``; a layer the
+workload does not run reads 0). The exit code is 0 only when every
+check passed, and 2 when the engine is missing.
 """
 
 from __future__ import annotations
@@ -59,22 +65,27 @@ PER_LAYER = {
     "udf.arrow_out_mb": "MiB", "udf.task_p50_s": "s", "udf.task_max_s": "s",
     "sink.busy_s": "s", "sink.out_mb": "MiB",
     "lineage.busy_s": "s", "lineage.resume_probe_s": "s",
-    "lineage.audit_s": "s", "noop.busy_s": "s",
+    "lineage.audit_s": "s",
+    # crash_resume's probe
+    "neardup.busy_s": "s", "neardup.jobs": "count",
+    "neardup.shuffle_mb": "MiB", "neardup.rows_in": "count",
+    "neardup.losers": "count",
+    # fresh_crawl's probe
     "mentions.busy_s": "s", "mentions.rows": "count",
     "instances.busy_s": "s", "instances.rows": "count",
     "train.busy_s": "s", "train.jobs": "count", "score.busy_s": "s",
+    # the untraced job's own Spark jobs
     "spark.jobs": "count", "spark.tasks": "count",
     "spark.tasks_failed": "count", "spark.shuffle_write_mb": "MiB",
     "spark.spill_mb": "MiB", "job.self_s": "s", "trace.overhead_s": "s",
-    # CPU seconds of the JVM and its Python workers over the timed job
-    # and re-run: the work, without the time a shared host steals
+    # CPU seconds of the JVM and its Python workers over the job and
+    # re-run: the work, without the time a shared host steals
     "job.cpu_s": "s", "noop.cpu_s": "s",
     # JVM heap grows lazily up to the shipped 8g, so peak RSS follows GC
     # timing (5.0-7.1 GiB between runs of one workload) — too loose to
     # bound end to end
     "peak_rss_mb": "MiB",
 }
-SETUP_REPS = 3
 
 
 def parse_args(argv):
@@ -146,8 +157,8 @@ def report(rep: dict) -> bool:
 
 
 def timed_reps(wl, seconds: float):
-    """Repetitions until ``seconds`` passed and the workload's minimum
-    count is reached; a repetition that raises is counted as failed."""
+    """Repetitions until ``seconds`` passed; a repetition that raises is
+    counted as failed."""
     reps, attempted, failed = [], 0, 0
     t0 = time.perf_counter()
     while True:
@@ -160,27 +171,35 @@ def timed_reps(wl, seconds: float):
         else:
             failed += report(rep)
             reps.append(rep)
-        if time.perf_counter() - t0 >= seconds and (
-                len(reps) >= wl.min_reps or failed):
+        if time.perf_counter() - t0 >= seconds:
             return reps, attempted, failed
 
 
-def traced_metrics(tracer, status, rep, untraced_job_s):
-    from perfbench.spans import descendants, self_times
+def traced_run(wl, tracer, status):
+    """The ``--trace 1`` part: an untraced repetition in job groups,
+    the decomposed one, then the workload's probe. Returns (the
+    untraced repetition, per-layer metrics, extra metrics, errors)."""
+    from perfbench.spans import self_times
 
-    job = tracer.by_name("job")[0]
-    tree = descendants(tracer.spans, job)
-    job_ids = [j for s in tree for j in status.job_ids(s.group)]
-    eng = status.stage_counters(job_ids)
-    return {
+    base = wl.run(tracer)
+    layer = wl.plan_metrics(tracer, status, base)
+    eng = status.stage_counters(
+        status.job_ids(tracer.by_name("job")[0].group))
+    rep, decomposed = wl.traced(tracer, status)
+    layer.update(decomposed)
+    probe, extra, errors = wl.probe(tracer, status)
+    layer.update(probe)
+    root = tracer.by_name("traced")[0]
+    layer.update({
         "spark.jobs": eng["jobs"],
         "spark.tasks": eng["tasks"],
         "spark.tasks_failed": eng["tasks_failed"],
         "spark.shuffle_write_mb": eng["shuffle_write_bytes"] / 2**20,
         "spark.spill_mb": eng["spill_bytes"] / 2**20,
-        "job.self_s": self_times(tree)[job.span_id],
-        "trace.overhead_s": rep["job_s"] - untraced_job_s,
-    }
+        "job.self_s": self_times(tracer.spans)[root.span_id],
+        "trace.overhead_s": rep["job_s"] - base["job_s"],
+    })
+    return base, layer, extra, errors + rep["errors"]
 
 
 def main(argv=None) -> int:
@@ -219,44 +238,34 @@ def main(argv=None) -> int:
          f"-Djava.io.tmpdir={tmp}", "-XX:-UsePerfData"]).strip()
     cores = len(os.sched_getaffinity(0))
 
-    warm_pages = pandas_web_pages(8)
-    starts, warms = [], []
     spark = None
+    errors, extra, layer = [], {}, {}
     try:
-        for _ in range(SETUP_REPS):
-            if spark is not None:
-                spark.stop()
-            spark, start_s, warm_s = start_session(cores, warm_pages)
-            starts.append(start_s)
-            warms.append(warm_s)
-        setup = [a + b for a, b in zip(starts, warms)]
-        log(f"set-up {[round(x, 2) for x in setup]} s")
+        spark, start_s, warm_s = start_session(cores, pandas_web_pages(8))
+        log(f"set-up {start_s:.2f} + {warm_s:.2f} s")
         t_prep = time.perf_counter()
-
         wl = Workload(spark, args.seed, args.docs or Workload.default_docs,
                       work)
         log(f"preparation {time.perf_counter() - t_prep:.1f} s")
         status = StatusReader(spark)
-        layer = {}
         with PeakRss(spark.sparkContext._gateway.proc.pid) as rss:
-            reps, attempted, failed = timed_reps(wl, args.seconds)
-        timed = [r["job_s"] for r in reps]
-        if args.trace and reps:
-            # the overhead is taken against an untraced repetition made
-            # right before, in the same warm state as the traced one
-            base = wl.run()
-            tracer = Tracer(f"s{args.seed}", spark.sparkContext)
-            rep, layer = wl.traced(tracer, status)
-            layer.update(traced_metrics(tracer, status, rep, base["job_s"]))
-            attempted += 2
-            failed += report(base) + report(rep)
-            reps += [base, rep]
+            if args.trace:
+                tracer = Tracer(f"s{args.seed}", spark.sparkContext)
+                base, layer, extra, errors = traced_run(wl, tracer, status)
+                reps, attempted, failed = [base], 2, int(report(base))
+            else:
+                reps, attempted, failed = timed_reps(wl, args.seconds)
         log(f"job_s {[round(r['job_s'], 2) for r in reps]}")
         t_check = time.perf_counter()
-        extra, errors = wl.check(reps[-1]) if reps else ({}, ["no run"])
+        if reps:
+            more, gate = wl.check(reps[-1])
+            extra.update(more)
+            errors += gate
+        else:
+            errors.append("no repetition finished")
         log(f"gate {time.perf_counter() - t_check:.1f} s")
         if errors:
-            log("gate failed: " + "; ".join(errors))
+            log("check failed: " + "; ".join(errors))
             if reps and not reps[-1]["errors"]:
                 failed += 1
     finally:
@@ -264,28 +273,26 @@ def main(argv=None) -> int:
             stop_spark(spark)
         shutil.rmtree(work, ignore_errors=True)
 
-    if not timed:
-        log("no repetition finished")
+    if not reps:
         return 1
-    runs = reps[:len(timed)]  # the timed repetitions
-    med = statistics.median(timed)
+    med = statistics.median(r["job_s"] for r in reps)
     e2e = {
-        "setup_s": statistics.median(setup),
+        "setup_s": start_s + warm_s,
         "job_s": med,
         "docs_per_s": wl.docs / med,
     }
     layer.update({
-        "session.start_s": statistics.median(starts),
-        "session.udf_warm_s": statistics.median(warms),
+        "session.start_s": start_s,
+        "session.udf_warm_s": warm_s,
         "peak_rss_mb": rss.peak / 2**20,
-        "job.cpu_s": statistics.median(r["job_cpu_s"] for r in runs),
+        "job.cpu_s": statistics.median(r["job_cpu_s"] for r in reps),
     })
-    if "noop_rerun_s" in runs[0]:  # the classify workload has no re-run
+    if "noop_rerun_s" in reps[0]:  # the classify workload has no re-run
         e2e["noop_rerun_s"] = statistics.median(
-            r["noop_rerun_s"] for r in runs)
-        layer["noop.cpu_s"] = statistics.median(r["noop_cpu_s"] for r in runs)
+            r["noop_rerun_s"] for r in reps)
+        layer["noop.cpu_s"] = statistics.median(r["noop_cpu_s"] for r in reps)
     for k, v in e2e.items():
-        emit(k, v, END_TO_END[k], len(setup) if k == "setup_s" else len(runs))
+        emit(k, v, END_TO_END[k], 1 if k == "setup_s" else len(reps))
     for k, (v, unit) in extra.items():
         emit(k, v, unit)
     emit("fail_frac", failed / attempted, "ratio", attempted)
@@ -297,7 +304,7 @@ def main(argv=None) -> int:
     else:
         for k in ("job.cpu_s", "noop.cpu_s", "peak_rss_mb"):
             if k in layer:
-                emit(k, layer[k], PER_LAYER[k], len(runs))
+                emit(k, layer[k], PER_LAYER[k], len(reps))
         metrics = {k: {"value": float(v), "unit": END_TO_END[k]}
                    for k, v in e2e.items()}
     correct = failed == 0 and not errors

@@ -4,8 +4,9 @@
     python3 perfbench/selftest.py --quick  # arithmetic only, no Spark
 
 Checks the span self-time arithmetic on a synthetic span tree, the
-SQL-metric parser, the keep/drop F1 and that BENCHMARK.json lists the
-metrics this program prints, then runs every workload at a
+SQL-metric parser, the keep/drop F1, the near-duplicate twins of the
+input generator and that BENCHMARK.json lists the metrics this program
+prints, then runs every workload at a
 tiny size with ``--trace 0`` and ``--trace 1`` and checks the output
 contract: every printed metric name matches ``[A-Za-z0-9_.-]+`` and
 has a unit, the last line is the JSON result with exactly the
@@ -23,6 +24,7 @@ from pathlib import Path
 HERE = Path(__file__).resolve().parent
 sys.path.insert(0, str(HERE.parent))
 
+from perfbench.inputs import near_twin  # noqa: E402
 from perfbench.run import END_TO_END, PER_LAYER  # noqa: E402
 from perfbench.spans import Tracer, covered, self_times  # noqa: E402
 from perfbench.status import parse_metric  # noqa: E402
@@ -69,6 +71,18 @@ def test_arithmetic() -> None:
           "f1 missing url")
     check(keep_f1({"a": False}, {"a": False}) == 1.0, "f1 no positives")
 
+    # a near-duplicate twin has the original's word set, other bytes and
+    # a url that sorts after the original's
+    from lgid_spark import datagen as D
+
+    for i in (1, 17 * 9 + 1, 11 * 3 + 1):  # plain, too-short, spam pages
+        base = D.row(i)
+        twin = near_twin(i, base)
+        check(set(twin["text"].split()) == set(base["text"].split())
+              and twin["text"] != base["text"]
+              and twin["html"] != base["html"]
+              and twin["url"] > base["url"], f"near twin of page {i}")
+
 
 def test_benchmark_file() -> None:
     """BENCHMARK.json names exactly the metrics and units run.py prints."""
@@ -98,8 +112,10 @@ def run_workload(name: str, trace: int) -> None:
     result = json.loads(lines[-1])
     check(set(result) == {"correct", "attempted", "failed", "metrics"},
           f"{name}: result keys {sorted(result)}")
-    check(result["correct"] and result["failed"] == 0
-          and result["attempted"] >= 1, f"{name}: {result}")
+    check(result["correct"] is True
+          and type(result["failed"]) is type(result["attempted"]) is int
+          and result["failed"] == 0 and result["attempted"] >= 1,
+          f"{name}: {result}")
     want = PER_LAYER if trace else END_TO_END
     # a workload outside BENCHMARK.json may lack a crawl-only metric
     got = set(result["metrics"])

@@ -102,12 +102,3 @@ def self_times(spans: list[Span]) -> dict[int, float]:
         out[s.span_id] = s.duration - covered([i for i in iv if i[1] > i[0]])
     return out
 
-
-def descendants(spans: list[Span], root: Span) -> list[Span]:
-    """root and every span below it."""
-    out, frontier = [root], [root.span_id]
-    while frontier:
-        nxt = [s for s in spans if s.parent in frontier]
-        out += nxt
-        frontier = [s.span_id for s in nxt]
-    return out

@@ -21,6 +21,7 @@ _UNITS = {
     "B": 1, "KiB": 1 << 10, "MiB": 1 << 20, "GiB": 1 << 30, "TiB": 1 << 40,
     "ns": 1e-9, "ms": 1e-3, "s": 1.0, "m": 60.0, "h": 3600.0,
 }
+_STAGE = re.compile(r"\(stage (\d+)\.(\d+): task \d+\)")
 _VALUE = re.compile(r"^\s*(-?[\d,]+(?:\.\d+)?)\s*([A-Za-z]*)")
 
 
@@ -76,13 +77,20 @@ class StatusReader:
             out["spill_bytes"] += s.memoryBytesSpilled() + s.diskBytesSpilled()
         return out
 
-    def task_quantiles(self, job_ids: list[int]) -> tuple[float, float]:
+    def node_task_quantiles(self, job_ids: list[int],
+                            node: str) -> tuple[float, float]:
         """(median, max) task run time in seconds of the busiest stage
-        (largest summed executor run time) the jobs ran."""
-        busiest = max(self._stages(job_ids), key=lambda s: s.executorRunTime(),
-                      default=None)
-        if busiest is None:
+        (largest summed executor run time) that ran plan node ``node``.
+        Spark names that stage in the "(stage <id>.<attempt>: task ...)"
+        suffix of the node's size and timing metrics."""
+        ran = {(int(a), int(b))
+               for _, v in self._node_metrics(job_ids, node) if v
+               for a, b in _STAGE.findall(v)}
+        stages = [s for s in self._stages(job_ids)
+                  if (s.stageId(), s.attemptId()) in ran]
+        if not stages:
             return 0.0, 0.0
+        busiest = max(stages, key=lambda s: s.executorRunTime())
         gw = self.sc._gateway
         q = gw.new_array(gw.jvm.double, 2)
         q[0], q[1] = 0.5, 1.0
@@ -93,10 +101,11 @@ class StatusReader:
         run = summary.get().executorRunTime()
         return run.apply(0) / 1000, run.apply(1) / 1000
 
-    def node_metrics(self, job_ids: list[int], node: str) -> dict[str, float]:
-        """SQL metrics of every plan node named ``node`` in executions
-        that ran any of ``job_ids``, summed by metric name."""
-        want, out = set(job_ids), {}
+    def _node_metrics(self, job_ids: list[int], node: str):
+        """(metric, value) of every SQL metric of every plan node named
+        ``node`` in executions that ran any of ``job_ids``; the value is
+        None when no task updated it."""
+        want = set(job_ids)
         for ex in _iterate(self._sql.executionsList()):
             if not want.intersection(_iterate(ex.jobs().keySet())):
                 continue
@@ -107,9 +116,15 @@ class StatusReader:
                     continue
                 for m in _iterate(n.metrics()):
                     v = values.get(m.accumulatorId())
-                    if v.isDefined():
-                        out[m.name()] = (out.get(m.name(), 0.0)
-                                         + parse_metric(v.get()))
+                    yield m, (v.get() if v.isDefined() else None)
+
+    def node_metrics(self, job_ids: list[int], node: str) -> dict[str, float]:
+        """SQL metrics of every plan node named ``node`` in executions
+        that ran any of ``job_ids``, summed by metric name."""
+        out: dict[str, float] = {}
+        for m, v in self._node_metrics(job_ids, node):
+            if v is not None:
+                out[m.name()] = out.get(m.name(), 0.0) + parse_metric(v)
         return out
 
 

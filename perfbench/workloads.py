@@ -1,22 +1,26 @@
 """The benchmark's workloads: inputs, one timed repetition, one traced
-repetition and the correctness gate, each through the engine's public
-entry points only.
+repetition, a probe of the layers the job itself does not use, and the
+correctness gate, each through the engine's public entry points only.
 
 * ``fresh_crawl`` — an all-unique crawl slice through the default
   ``lineage.run_incremental`` job (exact dedup on, near-dup off) into
   empty output and metrics paths: the product's steady state. The
   fused UDF, the dedup exchange and the sink carry the load; resume
-  has nothing to skip.
+  has nothing to skip. The job is timed as the session's first, as
+  each submission of the filter job runs it. Its probe runs the
+  classify layers on a small IGT corpus.
 * ``crash_resume`` — a dup-saturated slice (every 4th page has a
-  messy-url twin) of which an earlier run committed 48 of the 64
-  buckets. A repetition restores that crashed state, times the resumed
-  job, then times one more re-run that must process 0 rows. Dedup
-  collapses real twins, and resume decides what is written.
+  messy-url exact twin, every 8th a near-duplicate twin) of which an
+  earlier run committed 48 of the 64 buckets. A repetition restores
+  that crashed state, times the resumed job, then times one more
+  re-run that must process 0 rows. Dedup collapses the exact twins,
+  and resume decides what is written. Its probe runs
+  ``pipeline.near_dup_losers`` on the deduped slice.
 * ``igt_classify`` — a freki-shaped IGT corpus through train-then-
   classify ``classify.classify_documents``; it never enters
-  ``pipeline``. One job takes 40-50 s at any corpus size on a 4-core
-  host — too long for BENCHMARK.json's run budget — so it runs only
-  when named and in the self-test.
+  ``pipeline``. One job takes about 40 s at any corpus size on a
+  4-core host — too long for BENCHMARK.json's run budget — so it runs
+  only when named and in the self-test.
 
 Every crawl repetition ends with the idempotent re-run of the finished
 job, so ``noop_rerun_s`` exists on both crawl workloads.
@@ -26,6 +30,7 @@ from __future__ import annotations
 
 import shutil
 import time
+from contextlib import nullcontext
 from pathlib import Path
 
 from pyspark.sql import functions as F
@@ -35,6 +40,7 @@ from .proctree import engine_cpu_seconds
 from .spans import Tracer
 
 N_BUCKETS = 64
+CLASSIFY_DOCS = 300  # a classify job costs about the same at any size
 
 
 def _tree_bytes(path: Path) -> int:
@@ -64,24 +70,29 @@ def keep_f1(oracle_keep: dict, got_keep: dict) -> float:
     return 1.0 if tp + fp + fn == 0 else 2 * tp / (2 * tp + fp + fn)
 
 
+def _no_span(name):
+    return nullcontext()
+
+
 class Crawl:
     """A crawl slice through the default ``run_incremental`` job (exact
     dedup on, near-dup off). Subclasses fix the slice's shape: how
-    often a page has a messy-url twin, and how many buckets an earlier
-    run had committed before the timed job starts."""
+    often a page has a messy-url twin or a near-duplicate twin, and how
+    many buckets an earlier run had committed before the timed job
+    starts."""
 
     name = ""
     dup_every = 0
+    near_every = 0
     committed = 0
     default_docs = 0
-    min_reps = 1
 
     def __init__(self, spark, seed: int, n_docs: int, work: Path):
         from lgid_spark.lineage import run_incremental
 
         self.spark, self.seed, self.work = spark, seed, work
         self.input = str(inputs.crawl_pages_path(
-            seed, n_docs, self.dup_every))
+            seed, n_docs, self.dup_every, self.near_every))
         pages = spark.read.parquet(self.input)
         self.n_input, self.html_bytes = pages.agg(
             F.count("*"), F.sum(F.length("html"))).collect()[0]
@@ -89,7 +100,11 @@ class Crawl:
         self.rep_no = 0
         if not self.committed:
             # all pages unique: every row reaches the output, and the
-            # first repetition's books are the reference for the others
+            # first repetition's books are the reference for the others.
+            # No warm-up: the timed job is the session's first filter
+            # job, as in each submission of the filter job. An untimed
+            # warm-up job costs about 20 s on a 4-core host, more than
+            # the run budget leaves.
             self.expected_rows = self.n_input
             self.ref_metrics = str(work / "rep1" / "metrics")
             return
@@ -121,21 +136,27 @@ class Crawl:
             shutil.copytree(self.work / "crash" / "metrics", d / "metrics")
         return d / "out", d / "metrics"
 
-    def run(self) -> dict:
-        """One timed repetition: the job, then the idempotent re-run of
-        the finished job, which must process 0 rows."""
+    def run(self, tracer: Tracer | None = None) -> dict:
+        """One repetition: the job, then the idempotent re-run of the
+        finished job, which must process 0 rows. With a tracer the two
+        calls run in spans ``job`` and ``noop_rerun``, whose Spark job
+        groups let :meth:`plan_metrics` read the status stores."""
         from lgid_spark.lineage import run_incremental
 
+        span = tracer.span if tracer else _no_span
         spark = self.spark
         out, met = map(str, self._restore())
         pages = spark.read.parquet(self.input)
-        t0, c0 = time.perf_counter(), engine_cpu_seconds(spark)
-        r = run_incremental(spark, pages, out, met, "timed")
-        t1, c1 = time.perf_counter(), engine_cpu_seconds(spark)
-        again = run_incremental(spark, pages, out, met, "rerun")
-        t2, c2 = time.perf_counter(), engine_cpu_seconds(spark)
+        with span("job"):
+            t0, c0 = time.perf_counter(), engine_cpu_seconds(spark)
+            r = run_incremental(spark, pages, out, met, "timed")
+            t1, c1 = time.perf_counter(), engine_cpu_seconds(spark)
+        with span("noop_rerun"):
+            again = run_incremental(spark, pages, out, met, "rerun")
+            t2, c2 = time.perf_counter(), engine_cpu_seconds(spark)
         rep = dict(job_s=t1 - t0, job_cpu_s=c1 - c0, noop_rerun_s=t2 - t1,
-                   noop_cpu_s=c2 - c1, errors=[], out=out, metrics=met)
+                   noop_cpu_s=c2 - c1, rows=r["processed_rows"], errors=[],
+                   out=out, metrics=met)
         if r["processed_rows"] != self.expected_rows:
             rep["errors"].append(
                 f"job processed {r['processed_rows']} rows, "
@@ -145,18 +166,43 @@ class Crawl:
                 f"re-run processed {again['processed_rows']} rows")
         return rep
 
+    def plan_metrics(self, tracer: Tracer, status, rep: dict) -> dict:
+        """Fused-UDF and sink counters of the job that ``run(tracer)``
+        ran, read from the status stores of its own plan."""
+        jobs = status.job_ids(tracer.by_name("job")[0].group)
+        py = status.node_metrics(jobs, "ArrowEvalPython")
+        udf_rows = py.get("number of output rows", 0.0)
+        p50, pmax = status.node_task_quantiles(jobs, "ArrowEvalPython")
+        return {
+            "udf.rows": udf_rows,
+            # rows written per row the UDF labelled: the share of the
+            # UDF's work that was needed
+            "udf.useful_ratio": rep["rows"] / udf_rows if udf_rows else 0.0,
+            "udf.py_run_s": py.get("time to run Python workers", 0.0),
+            "udf.py_init_s":
+                py.get("time to initialize Python workers", 0.0),
+            "udf.arrow_in_mb":
+                py.get("data sent to Python workers", 0) / 2**20,
+            "udf.arrow_out_mb":
+                py.get("data returned from Python workers", 0) / 2**20,
+            "udf.task_p50_s": p50,
+            "udf.task_max_s": pmax,
+            "sink.out_mb": _tree_bytes(Path(rep["out"])) / 2**20,
+        }
+
     def traced(self, tracer: Tracer, status) -> tuple[dict, dict]:
         """The job decomposed into the public calls ``run_incremental``
-        makes, each materialised in its own span; then the no-op re-run
-        and the audit."""
+        makes, each materialised in its own span under ``traced``, then
+        the audit. The spans give the layers' busy times; the dedup span
+        also the counters of ``exact_dedup_pages`` called on its own."""
         from lgid_spark.lineage import (
-            audit_lineage, committed_buckets, lineage_rows, run_incremental)
+            audit_lineage, committed_buckets, lineage_rows)
         from lgid_spark.pipeline import exact_dedup_pages, quality_pipeline
 
         spark = self.spark
         out, met = map(str, self._restore())
         pages = spark.read.parquet(self.input)
-        with tracer.span("job") as job:
+        with tracer.span("traced") as root:
             with tracer.span("lineage.resume_probe"):
                 done = committed_buckets(spark, met)
                 done.collect()
@@ -180,27 +226,14 @@ class Crawl:
                 lin.unpersist()
             todo.unpersist()
             deduped.unpersist()
-        errors = []
-        with tracer.span("noop_rerun"):
-            again = run_incremental(spark, pages, out, met, "rerun")
-        if again["processed_rows"] != 0:
-            errors.append("traced re-run was not a no-op")
         with tracer.span("lineage.audit"):
             audit_rows = audit_lineage(spark, out, met).count()
-
-        def jobs(name):
-            return status.job_ids(tracer.by_name(name)[0].group)
 
         def dur(name):
             return tracer.by_name(name)[0].duration
 
-        dd = status.stage_counters(jobs("dedup"))
-        udf_jobs = jobs("udf")
-        py = status.node_metrics(udf_jobs, "ArrowEvalPython")
-        udf_rows = py.get("number of output rows", 0.0)
-        sink = status.node_metrics(
-            jobs("sink"), "Execute InsertIntoHadoopFsRelationCommand")
-        p50, pmax = status.task_quantiles(udf_jobs)
+        dd = status.stage_counters(
+            status.job_ids(tracer.by_name("dedup")[0].group))
         layer = {
             "dedup.busy_s": dur("dedup"),
             "dedup.rows_in": self.n_input,
@@ -208,30 +241,18 @@ class Crawl:
             "dedup.collapse_ratio": dedup_rows / self.n_input,
             "dedup.shuffle_mb": dd["shuffle_write_bytes"] / 2**20,
             "udf.busy_s": dur("udf"),
-            "udf.rows": udf_rows,
-            "udf.useful_ratio": n_rows / udf_rows if udf_rows else 0.0,
-            "udf.py_run_s": py.get("time to run Python workers", 0.0),
-            "udf.py_init_s": py.get("time to initialize Python workers", 0.0),
-            "udf.arrow_in_mb": py.get("data sent to Python workers", 0) / 2**20,
-            "udf.arrow_out_mb":
-                py.get("data returned from Python workers", 0) / 2**20,
-            "udf.task_p50_s": p50,
-            "udf.task_max_s": pmax,
             "sink.busy_s": dur("sink"),
-            "sink.out_mb": sink.get("written output", 0.0) / 2**20,
             "lineage.busy_s": dur("lineage"),
             "lineage.resume_probe_s": dur("lineage.resume_probe"),
             "lineage.audit_s": dur("lineage.audit"),
-            "noop.busy_s": dur("noop_rerun"),
         }
+        errors = []
         if n_rows != self.expected_rows:
             errors.append(f"traced job wrote {n_rows} rows, "
                           f"expected {self.expected_rows}")
         if audit_rows:
             errors.append(f"audit found {audit_rows} disagreeing buckets")
-        rep = dict(job_s=job.duration, errors=errors, out=out, metrics=met)
-        return rep, layer
-
+        return dict(job_s=root.duration, errors=errors), layer
     def check(self, rep: dict) -> tuple[dict, list[str]]:
         """Full gate on a finished repetition's output: the audit is
         empty, every input row is accounted for, and the books equal
@@ -297,18 +318,62 @@ class FreshCrawl(Crawl):
     name = "fresh_crawl"
     default_docs = 2000
 
+    def probe(self, tracer: Tracer, status):
+        """The classify layers, which no crawl job uses, on a small IGT
+        corpus in span ``classify``, off the timed path."""
+        igt = IgtClassify(self.spark, self.seed, CLASSIFY_DOCS, self.work)
+        with tracer.span("classify"):
+            best, layer = igt.layers(tracer, status)
+        extra, errors = igt.check(dict(best=best))
+        return layer, extra, errors
+
 
 class CrashResume(Crawl):
     name = "crash_resume"
     dup_every = 4
+    near_every = 8
     committed = 48  # about 3/4 of the 64 buckets
     default_docs = 1000
+
+    def probe(self, tracer: Tracer, status):
+        """``pipeline.near_dup_losers`` — MinHash, LSH, exact Jaccard and
+        connected components — on the slice after exact dedup, as
+        ``run_incremental(near_dup=True)`` calls it, in span
+        ``neardup``, off the timed path. Every near-duplicate twin of
+        the input must come out as a loser."""
+        from lgid_spark.pipeline import exact_dedup_pages, near_dup_losers
+
+        pages = self.spark.read.parquet(self.input)
+        twins = {r.url for r in pages.where(
+            F.col("url").endswith(inputs.NEAR_SUFFIX)).select("url")
+            .collect()}
+        with tracer.span("neardup.input"):
+            deduped = exact_dedup_pages(
+                pages.select("url", "warc_ts", "html", "lang", "text"),
+                N_BUCKETS).persist()
+            rows_in = deduped.count()
+        with tracer.span("neardup") as span:
+            losers = {r.url for r in
+                      near_dup_losers(deduped).select("url").collect()}
+        deduped.unpersist()
+        jobs = status.job_ids(span.group)
+        layer = {
+            "neardup.busy_s": span.duration,
+            "neardup.jobs": len(jobs),
+            "neardup.shuffle_mb":
+                status.stage_counters(jobs)["shuffle_write_bytes"] / 2**20,
+            "neardup.rows_in": rows_in,
+            "neardup.losers": len(losers),
+        }
+        missed = len(twins - losers)
+        errors = [f"near-dup kept {missed} of {len(twins)} twins"] \
+            if missed else []
+        return layer, {}, errors
 
 
 class IgtClassify:
     name = "igt_classify"
     default_docs = 2000
-    min_reps = 1
 
     def __init__(self, spark, seed: int, n_docs: int, work: Path):
         self.spark = spark
@@ -319,20 +384,25 @@ class IgtClassify:
     def _lines(self):
         return self.spark.read.parquet(self.lines_path)
 
-    def run(self) -> dict:
+    def run(self, tracer: Tracer | None = None) -> dict:
         from lgid_spark.classify import classify_documents
         from lgid_spark.fixtures import LANG_TABLE
 
+        span = tracer.span if tracer else _no_span
         lines = self._lines()
-        t0, c0 = time.perf_counter(), engine_cpu_seconds(self.spark)
-        best = classify_documents(self.spark, lines, LANG_TABLE)
-        return dict(job_s=time.perf_counter() - t0,
-                    job_cpu_s=engine_cpu_seconds(self.spark) - c0,
-                    errors=[], best=best)
+        with span("job"):
+            t0, c0 = time.perf_counter(), engine_cpu_seconds(self.spark)
+            best = classify_documents(self.spark, lines, LANG_TABLE)
+            t1, c1 = time.perf_counter(), engine_cpu_seconds(self.spark)
+        return dict(job_s=t1 - t0, job_cpu_s=c1 - c0, errors=[], best=best)
 
-    def traced(self, tracer: Tracer, status) -> tuple[dict, dict]:
-        """classify_documents decomposed into its public calls:
-        mentions → instances → train → score + best_candidates."""
+    def plan_metrics(self, tracer: Tracer, status, rep: dict) -> dict:
+        return {}
+
+    def layers(self, tracer: Tracer, status):
+        """classify_documents decomposed into its public calls, one span
+        each: mentions → instances → train → score + best_candidates.
+        Returns (best, per-layer metrics)."""
         from lgid_spark.classify import (
             build_instances, release_instance_caches)
         from lgid_spark.fixtures import LANG_TABLE
@@ -341,33 +411,32 @@ class IgtClassify:
         from lgid_spark.operators.mentions import extract_mentions
 
         spark = self.spark
-        with tracer.span("job") as job:
-            lines = self._lines().persist()
-            with tracer.span("mentions"):
-                m = extract_mentions(
-                    spark, lines.select("doc_id", "lineno", "text"),
-                    LANG_TABLE).persist()
-                n_mentions = m.count()
-                m.unpersist()
-            with tracer.span("instances"):
-                inst = build_instances(spark, lines, LANG_TABLE).persist()
-                n_inst = inst.count()
-            with tracer.span("train"):
-                mdl = train(inst, num_features=N_FEATURES)
-            with tracer.span("score"):
-                best = best_candidates(score(inst, mdl, N_FEATURES)).select(
-                    "doc_id", "span_id", "lineno", "lang_name", "lang_code",
-                    "prediction", "p_true", "norm_prob", "signed_prob",
-                    "label").persist()
-                best.count()
-            inst.unpersist()
-            lines.unpersist()
-            release_instance_caches(inst)
+        lines = self._lines().persist()
+        with tracer.span("mentions"):
+            m = extract_mentions(
+                spark, lines.select("doc_id", "lineno", "text"),
+                LANG_TABLE).persist()
+            n_mentions = m.count()
+            m.unpersist()
+        with tracer.span("instances"):
+            inst = build_instances(spark, lines, LANG_TABLE).persist()
+            n_inst = inst.count()
+        with tracer.span("train"):
+            mdl = train(inst, num_features=N_FEATURES)
+        with tracer.span("score"):
+            best = best_candidates(score(inst, mdl, N_FEATURES)).select(
+                "doc_id", "span_id", "lineno", "lang_name", "lang_code",
+                "prediction", "p_true", "norm_prob", "signed_prob",
+                "label").persist()
+            best.count()
+        inst.unpersist()
+        lines.unpersist()
+        release_instance_caches(inst)
 
         def span(name):
             return tracer.by_name(name)[0]
 
-        layer = {
+        return best, {
             "mentions.busy_s": span("mentions").duration,
             "mentions.rows": n_mentions,
             "instances.busy_s": span("instances").duration,
@@ -376,7 +445,15 @@ class IgtClassify:
             "train.jobs": len(status.job_ids(span("train").group)),
             "score.busy_s": span("score").duration,
         }
-        return dict(job_s=job.duration, errors=[], best=best), layer
+
+    def traced(self, tracer: Tracer, status) -> tuple[dict, dict]:
+        with tracer.span("traced") as root:
+            best, layer = self.layers(tracer, status)
+        best.unpersist()
+        return dict(job_s=root.duration, errors=[]), layer
+
+    def probe(self, tracer: Tracer, status):
+        return {}, {}, []
 
     def check(self, rep: dict) -> tuple[dict, list[str]]:
         """Exactly one prediction per gold L-line."""
