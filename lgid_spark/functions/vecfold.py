@@ -24,11 +24,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def _mat(s: pd.Series) -> np.ndarray:
+def _mat(s: pd.Series, dim: int = 0) -> np.ndarray:
     """Series of fixed-width float arrays → (n, dim) float64 matrix
-    (float32 → float64 widening is exact, same as the SQL cast)."""
+    (float32 → float64 widening is exact, same as the SQL cast); an
+    empty batch is (0, dim), so it broadcasts against (dim,) rows."""
     if len(s) == 0:
-        return np.empty((0, 0), dtype=np.float64)
+        return np.empty((0, dim), dtype=np.float64)
     return np.stack(s.to_numpy()).astype(np.float64)
 
 
@@ -85,7 +86,7 @@ def make_sig_norm_udf(signs: list[list[float]]):
 
     @F.pandas_udf(schema)
     def sig_norm_udf(emb: pd.Series) -> pd.DataFrame:
-        E = _mat(emb)
+        E = _mat(emb, S.shape[1])
         sig = np.zeros(len(emb), dtype=np.int64)
         for k in range(n_planes):
             proj = _seq_sum(E * S[k])
@@ -103,7 +104,7 @@ def make_sig_udf(signs: list[list[float]]):
 
     @F.pandas_udf(T.IntegerType())
     def sig_udf(emb: pd.Series) -> pd.Series:
-        E = _mat(emb)
+        E = _mat(emb, S.shape[1])
         sig = np.zeros(len(emb), dtype=np.int64)
         for k in range(n_planes):
             proj = _seq_sum(E * S[k])

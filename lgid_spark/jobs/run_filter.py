@@ -19,8 +19,11 @@ pass → optional host blocklist → bucket-partitioned output + lineage
 (dedup_dropped / near_dup_dropped / drop_hist per bucket).
 
 Resumable: re-running with the same metrics path processes only buckets
-not yet committed (lineage.run_incremental). Prints one JSON summary
-line to stdout.
+not yet committed (lineage.run_incremental). The committed bucket ids
+are read once and the input rows of those buckets are filtered out
+before the dedup exchange and the UDF pass; one probe decides the
+no-op, so re-running a finished job does no dedup or UDF work. Prints
+one JSON summary line to stdout.
 """
 
 from __future__ import annotations

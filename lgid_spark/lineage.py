@@ -10,9 +10,12 @@ metrics table:
   xxhash64(url || scrubbed_text) over the bucket — two runs that
   produced byte-identical output per url have equal checksums no
   matter how rows were partitioned or ordered.
-* Resume = anti-join the input's buckets against the buckets already
-  committed in the metrics table: a crashed run re-processes only the
-  missing buckets, and a re-run of a complete job is a no-op.
+* Resume filters the raw input BEFORE any shuffle: the committed
+  bucket ids are read once into a driver-side list, and rows whose
+  bucket is in it never reach the dedup exchange or the UDF. One probe
+  (is any row left?) then decides the no-op, so a crashed run
+  re-processes only the missing buckets and a re-run of a complete job
+  costs the schema guards, the id read and that probe.
 
 This is the Iceberg-metrics-table design from SURVEY.md §2.10/§4
 expressed over plain parquet (the sandbox has no Iceberg runtime jar):
@@ -25,15 +28,20 @@ needs.
 from __future__ import annotations
 
 import hashlib
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .pipeline import (
     apply_domain_blocklist,
+    bucket_id,
+    canonical_url,
     exact_dedup_pages,
     near_dup_losers,
+    output_columns,
     quality_pipeline,
+    stage_deduped_pages,
     with_bucket,
 )
 
@@ -178,7 +186,7 @@ def _path_exists(spark: SparkSession, path: str) -> bool:
     """Existence check through the Hadoop FileSystem API so it works
     for ANY storage URI (hdfs://, s3a://, file:, plain local) — a bare
     os.path.exists is always False for remote URIs, which would
-    silently disable the resume anti-join and the schema guard exactly
+    silently disable the resume filter and the schema guard exactly
     where a real cluster runs."""
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(path)
@@ -218,12 +226,169 @@ def _check_append_schema(
             % (output_path, sorted(existing), sorted(new_cols)))
 
 
-def committed_buckets(spark: SparkSession, metrics_path: str) -> DataFrame:
-    """Buckets already recorded in the metrics table (empty frame if the
-    table doesn't exist yet)."""
+def committed_bucket_ids(spark: SparkSession, metrics_path: str) -> list[int]:
+    """Buckets already recorded in the metrics table, as a sorted
+    driver-side list (empty if the table doesn't exist yet). The table
+    holds at most snapshots × N rows, so they are deduplicated here:
+    one scan job with the schema given — no inference, no shuffle."""
     if not _path_exists(spark, metrics_path):
-        return spark.createDataFrame([], "bucket int")
-    return spark.read.parquet(metrics_path).select("bucket").distinct()
+        return []
+    rows = spark.read.schema("bucket int").parquet(metrics_path).collect()
+    return sorted({r.bucket for r in rows})
+
+
+def committed_buckets(spark: SparkSession, metrics_path: str) -> DataFrame:
+    """committed_bucket_ids as a one-column (bucket) frame."""
+    return spark.createDataFrame(
+        [(b,) for b in committed_bucket_ids(spark, metrics_path)],
+        "bucket int")
+
+
+class Todo(NamedTuple):
+    """What a resumed run has left to do (see resume_frames)."""
+
+    labelled: DataFrame                 # rows to write: uncommitted buckets
+    near_dup_counts: DataFrame | None   # (bucket, near_dup_dropped, ...)
+    fresh_buckets: DataFrame | None     # near-dup: uncommitted input buckets
+    cached: DataFrame | None            # persisted near-dup input
+
+
+def resume_frames(
+    spark: SparkSession,
+    web_pages: DataFrame,
+    done: list[int],
+    n_buckets: int = 64,
+    emit_extracted: bool = False,
+    dedup: bool = True,
+    near_dup: bool = False,
+    near_dup_jaccard: float = 0.9,
+    near_dup_max_bucket: int = 1000,
+    blocked_hosts: DataFrame | None = None,
+    trust_url_canon: bool = False,
+    stage_path: str | None = None,
+) -> Todo | None:
+    """The frames run_incremental writes, for a metrics table that has
+    committed the bucket ids ``done``; None when no input row falls in
+    an uncommitted bucket (the no-op).
+
+    The committed filter ``NOT bucket IN (done)`` applies to the RAW
+    rows, before the dedup projection: the bucket is a pure function of
+    the dedup group key (pipeline.bucket_id over the trusted url_canon,
+    canonical_url(url), or url without dedup), so dropping whole buckets
+    before the aggregate cannot change any winner, and committed rows
+    never reach the exchange or the UDF. With committed buckets, one
+    probe — isEmpty() over the filtered rows, a pruned url scan — runs
+    before the fused UDF or the near-dup chain is even built
+    (connected_components materializes at DAG-build time). A run with
+    nothing committed pays no probe."""
+    extra_cols: tuple[str, ...] = ()
+    if dedup:
+        # project BEFORE the dedup shuffle: the UDF pass reads html
+        # (never the raw text column), so shipping text through the
+        # exchange would roughly double the shuffle volume for nothing;
+        # near-dup is the one consumer of text downstream. A trusted
+        # url_canon (pre-canonicalized bucketed table) keeps the layout
+        # column so the dedup aggregate runs exchange-free on its scan.
+        # Trust is opt-in (run_filter sets it for table:/bucketed:
+        # inputs only): a plain parquet input that merely HAPPENS to
+        # carry a url_canon column — foreign, or written before a
+        # canonical_url change — must be re-canonicalized
+        trusted = trust_url_canon and "url_canon" in web_pages.columns
+        needed = ["url", "warc_ts", "html", "lang"] + (
+            ["text"] if near_dup else []) + (
+            ["url_canon"] if trusted else [])
+        pages = web_pages.select(
+            *[c for c in needed if c in web_pages.columns])
+        if not trusted:
+            pages = pages.withColumn("url_canon", canonical_url(F.col("url")))
+        key = bucket_id(F.col("url_canon"), n_buckets)
+        extra_cols = ("dup_count",)
+    else:
+        pages = with_bucket(web_pages, n_buckets)
+        key = F.col("bucket")
+
+    def uncommitted(df: DataFrame, b: Column = F.col("bucket")) -> DataFrame:
+        return df.where(~b.isin(done)) if done else df
+
+    fresh = uncommitted(pages, key)
+    # the probe: isEmpty is limit(1) + take — one job over the pruned
+    # url (or url_canon) column, where limit(1).count() costs two
+    if done and fresh.isEmpty():
+        return None
+    nd_counts = fresh_buckets = cached = None
+    if near_dup:
+        # near_dup_losers runs over the FULL deduped input: a canonical
+        # doc in a committed bucket still decides losers in uncommitted
+        # ones (ADVICE r4); the committed filter applies after the
+        # loser anti-join
+        deduped = exact_dedup_pages(pages, n_buckets) if dedup else pages
+        if stage_path is not None:
+            # crawl-scale staging (VERDICT r4 #3): materialize the
+            # deduped frame once instead of persisting html+text in
+            # executor memory; each consumer below then plans a plain
+            # bucketed scan of the written table (asserted in
+            # tests/test_dedup_job.py::test_staged_near_dup_plans)
+            staged = stage_deduped_pages(
+                spark, deduped,
+                "lgid_stage_" + hashlib.md5(
+                    stage_path.encode()).hexdigest()[:10],
+                stage_path, n_buckets)
+        else:
+            staged = cached = deduped.persist()
+        losers = near_dup_losers(
+            staged, jaccard_min=near_dup_jaccard,
+            max_band_bucket=near_dup_max_bucket)
+        # counts keyed on the CANONICAL doc's bucket — that bucket
+        # always has a surviving row, so the lineage row exists. A
+        # loser removed here also takes its exact-dedup dup_count out
+        # of the labelled frame, so carry those drops along or the
+        # books (input = processed + dedup + near_dup) stop balancing.
+        loser_dd = (
+            (F.sum(F.col("dup_count") - 1) if dedup else F.lit(0))
+            .cast("long").alias("loser_dedup_dropped"))
+        # only losers whose OWN bucket is uncommitted are new to the
+        # books: a loser sitting in a committed bucket was already
+        # accounted in the snapshot that committed it — processed (its
+        # row stays in the append-only output) or dropped — and
+        # re-counting it on every later resume (near_dup_losers re-runs
+        # over the FULL input whenever any bucket is uncommitted) would
+        # inflate near_dup_dropped without bound
+        countable = uncommitted(losers)
+        enriched = (countable.join(staged.select("url", "dup_count"), "url")
+                    if dedup else countable)
+        nd_counts = enriched.groupBy(
+            F.col("canon_bucket").alias("bucket")).agg(
+            F.count("*").alias("near_dup_dropped"), loser_dd)
+        fresh = uncommitted(
+            staged.join(losers.select("url"), "url", "left_anti"))
+        fresh_buckets = uncommitted(staged.select("bucket")).distinct()
+    elif dedup:
+        fresh = exact_dedup_pages(fresh, n_buckets)
+    labelled = quality_pipeline(
+        spark, fresh, n_buckets=n_buckets,
+        emit_extracted=emit_extracted, extra_cols=extra_cols)
+    if blocked_hosts is not None:
+        # optional UT1-style host blocklist (broadcast bounded dim);
+        # blocked rows stay in the output with keep=false and a
+        # 'blocked_domain' drop reason, counted in the lineage
+        # drop_hist like any other rule
+        labelled = apply_domain_blocklist(labelled, blocked_hosts)
+    return Todo(labelled, nd_counts, fresh_buckets, cached)
+
+
+def _counts_only(df: DataFrame, snapshot_id: str, dedup_dropped: Column,
+                 near_dup_dropped: Column) -> DataFrame:
+    """Lineage rows that carry drop counts but no output rows."""
+    return df.select(
+        "bucket",
+        F.lit(snapshot_id).alias("snapshot_id"),
+        F.lit(0).cast("long").alias("input_count"),
+        F.lit(0).cast("long").alias("kept_count"),
+        dedup_dropped.cast("long").alias("dedup_dropped"),
+        near_dup_dropped.cast("long").alias("near_dup_dropped"),
+        F.lit(None).cast("map<string,bigint>").alias("drop_hist"),
+        F.lit(None).cast("bigint").alias("checksum"),
+    )
 
 
 def run_incremental(
@@ -244,11 +409,15 @@ def run_incremental(
 ) -> dict:
     """Process only not-yet-committed buckets; append output + lineage.
 
-    Idempotent: if every bucket is committed this is a no-op. Crash
-    between the output write and the metrics write re-processes the
-    affected buckets on retry; downstream readers must key on the
-    metrics table (standard write-ahead-commit pattern — with real
-    Iceberg both writes share one transaction).
+    Idempotent: if every bucket is committed this is a no-op that costs
+    the two append-schema guards, one read of the committed bucket ids
+    and one probe — no dedup exchange, no fused UDF, no model
+    broadcast. Rows of committed buckets are filtered out of the raw
+    input before anything else (resume_frames). Crash between the
+    output write and the metrics write re-processes the affected
+    buckets on retry; downstream readers must key on the metrics table
+    (standard write-ahead-commit pattern — with real Iceberg both
+    writes share one transaction).
 
     Dedup runs BEFORE the expensive Arrow UDF pass (round 4):
 
@@ -276,201 +445,72 @@ def run_incremental(
     Arrow return volume of the fused UDF and the output parquet size,
     and its per-url bytes are already pinned by the parity tests —
     pass emit_extracted=True for a debug/parity run."""
-    extra_cols: tuple[str, ...] = ()
-    pages = web_pages
-    if dedup:
-        # project BEFORE the dedup shuffle: the UDF pass reads html
-        # (never the raw text column), so shipping text through the
-        # exchange would roughly double the shuffle volume for nothing;
-        # near-dup is the one consumer of text downstream
-        needed = ["url", "warc_ts", "html", "lang"] + (
-            ["text"] if near_dup else [])
-        if trust_url_canon and "url_canon" in pages.columns:
-            # pre-canonicalized bucketed table: keep the layout column
-            # so the dedup aggregate runs exchange-free on its scan.
-            # Opt-in (run_filter sets it for table:/bucketed: inputs
-            # only): a plain parquet input that merely HAPPENS to
-            # carry a url_canon column — foreign, or written before a
-            # canonical_url change — must be re-canonicalized, not
-            # trusted
-            needed.append("url_canon")
-        pages = exact_dedup_pages(
-            pages.select(*[c for c in needed if c in pages.columns]),
-            n_buckets)
-        extra_cols = ("dup_count",)
-    nd_counts = None
-    staged = cached = None
-    if near_dup:
-        if "bucket" not in pages.columns:
-            pages = with_bucket(pages, n_buckets)
-        # no-op probe BEFORE the near-dup chain: connected_components
-        # localCheckpoints (materializes) at DAG-BUILD time, so an
-        # idempotent resume of a finished job would otherwise pay the
-        # whole MinHash/Jaccard/components cost just to discover there
-        # is nothing to do. The probe computes buckets straight from
-        # the RAW urls (same key definition as the dedup stage) so it
-        # is a column-pruned url scan, not a run of the dedup shuffle.
-        from .pipeline import canonical_url
-
-        if dedup:
-            # prefer a TRUSTED stored url_canon column: same value,
-            # but the probe then scans ONE pruned column of the
-            # bucketed table
-            key = (F.col("url_canon")
-                   if trust_url_canon and "url_canon" in web_pages.columns
-                   else canonical_url(F.col("url")))
-        else:
-            key = F.col("url")
-        probe_buckets = web_pages.select(
-            F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int")
-            .alias("bucket")).distinct()
-        done_probe = committed_buckets(spark, metrics_path)
-        if probe_buckets.join(
-                F.broadcast(done_probe), "bucket", "left_anti"
-        ).limit(1).count() == 0:
-            return {"processed_rows": 0, "processed_buckets": 0}
-        if stage_path is not None:
-            # crawl-scale staging (VERDICT r4 #3): materialize the
-            # deduped frame once instead of persisting html+text in
-            # executor memory; each consumer below then plans a plain
-            # bucketed scan of the written table (asserted in
-            # tests/test_dedup_job.py::test_staged_near_dup_plans)
-            from .pipeline import stage_deduped_pages
-
-            staged = stage_deduped_pages(
-                spark, pages,
-                "lgid_stage_" + hashlib.md5(
-                    stage_path.encode()).hexdigest()[:10],
-                stage_path, n_buckets)
-        else:
-            staged = cached = pages.persist()
-        losers = near_dup_losers(
-            staged, jaccard_min=near_dup_jaccard,
-            max_band_bucket=near_dup_max_bucket)
-        # counts keyed on the CANONICAL doc's bucket — that bucket
-        # always has a surviving row, so the lineage row exists. A
-        # loser removed here also takes its exact-dedup dup_count out
-        # of the labelled frame, so carry those drops along or the
-        # books (input = processed + dedup + near_dup) stop balancing.
-        loser_dd = (
-            (F.sum(F.col("dup_count") - 1) if dedup else F.lit(0))
-            .cast("long").alias("loser_dedup_dropped"))
-        # only losers whose OWN bucket is uncommitted are new to the
-        # books: a loser sitting in a committed bucket was already
-        # accounted in the snapshot that committed it — processed (its
-        # row stays in the append-only output) or dropped — and
-        # re-counting it on every later resume (near_dup_losers re-runs
-        # over the FULL input whenever any bucket is uncommitted) would
-        # inflate near_dup_dropped without bound. The output anti-join
-        # below still removes ALL losers; committed buckets are never
-        # rewritten anyway (the todo anti-join).
-        countable = losers.join(F.broadcast(done_probe), "bucket",
-                                "left_anti")
-        enriched = (countable.join(staged.select(
-            "url", *(["dup_count"] if dedup else [])), "url")
-            if dedup else countable)
-        nd_counts = enriched.groupBy(
-            F.col("canon_bucket").alias("bucket")).agg(
-            F.count("*").alias("near_dup_dropped"), loser_dd)
-        pages = staged.join(
-            losers.select("url"), "url", "left_anti")
+    _check_append_schema(spark, output_path, output_columns(
+        emit_extracted, extra_cols=("dup_count",) if dedup else ()))
+    _check_append_schema(
+        spark, metrics_path,
+        spark.createDataFrame([], METRICS_SCHEMA).schema.names)
+    done = committed_bucket_ids(spark, metrics_path)
+    todo = resume_frames(
+        spark, web_pages, done, n_buckets=n_buckets,
+        emit_extracted=emit_extracted, dedup=dedup, near_dup=near_dup,
+        near_dup_jaccard=near_dup_jaccard,
+        near_dup_max_bucket=near_dup_max_bucket,
+        blocked_hosts=blocked_hosts, trust_url_canon=trust_url_canon,
+        stage_path=stage_path)
+    if todo is None:
+        return {"processed_rows": 0, "processed_buckets": 0}
+    # cache: output write and lineage agg share the expensive UDF pass
+    labelled = todo.labelled.persist()
     try:
-        labelled = quality_pipeline(
-            spark, pages, n_buckets=n_buckets,
-            emit_extracted=emit_extracted, extra_cols=extra_cols)
-        if blocked_hosts is not None:
-            # optional UT1-style host blocklist (broadcast bounded dim);
-            # blocked rows stay in the output with keep=false and a
-            # 'blocked_domain' drop reason, counted in the lineage
-            # drop_hist like any other rule
-            labelled = apply_domain_blocklist(labelled, blocked_hosts)
-        _check_append_schema(spark, output_path, labelled.schema.names)
-        _check_append_schema(
-            spark, metrics_path,
-            spark.createDataFrame([], METRICS_SCHEMA).schema.names)
-        done = committed_buckets(spark, metrics_path)
-        todo = labelled.join(F.broadcast(done), "bucket", "left_anti")
-
-        # cache: output write and lineage agg share the expensive UDF pass
-        todo.persist()
-        try:
-            n_rows = todo.count()
-            if n_rows == 0 and not near_dup:
-                return {"processed_rows": 0, "processed_buckets": 0}
-            # near_dup can leave todo empty while uncommitted probe
-            # buckets remain (every doc of every uncommitted bucket
-            # lost to a committed-bucket canonical): lineage must still
-            # commit those buckets below or resume would re-run the
-            # whole near-dup chain forever.
-            if n_rows:
-                (
-                    todo.write.mode("append")
-                    .partitionBy("bucket")
-                    .parquet(output_path)
-                )
-            lin = lineage_rows(todo, snapshot_id, nd_counts)
-            if near_dup:
-                # a bucket whose EVERY doc was a near-dup loser has no
-                # surviving rows and thus no lineage row from todo —
-                # commit a zero-count row for it or resume would redo
-                # the whole near-dup chain forever just to rediscover
-                # the empty bucket
-                emptied = (
-                    probe_buckets
-                    .join(F.broadcast(done), "bucket", "left_anti")
-                    .join(lin.select("bucket"), "bucket", "left_anti")
-                    .select(
-                        "bucket",
-                        F.lit(snapshot_id).alias("snapshot_id"),
-                        F.lit(0).cast("long").alias("input_count"),
-                        F.lit(0).cast("long").alias("kept_count"),
-                        F.lit(0).cast("long").alias("dedup_dropped"),
-                        F.lit(0).cast("long").alias("near_dup_dropped"),
-                        F.lit(None).cast("map<string,bigint>")
-                        .alias("drop_hist"),
-                        F.lit(None).cast("bigint").alias("checksum"),
-                    )
-                )
-                lin = lin.unionByName(emptied)
-                # ADVICE r4: on a resume over an EXTENDED input, a new
-                # doc can lose to a canonical doc whose bucket is
-                # already committed — lineage_rows builds rows from
-                # `todo` (uncommitted buckets) only, so that loser's
-                # drop would vanish and the books (input = processed +
-                # dedup_dropped + near_dup_dropped) silently break.
-                # Append a counts-only lineage row per committed canon
-                # bucket carrying its near-dup drops (and the exact-
-                # dedup drops that left with the losers).
-                loser_dd = (
-                    F.coalesce(F.col("loser_dedup_dropped"), F.lit(0))
-                    if "loser_dedup_dropped" in nd_counts.columns
-                    else F.lit(0))
-                nd_committed = (
-                    nd_counts.join(F.broadcast(done), "bucket", "left_semi")
-                    .select(
-                        "bucket",
-                        F.lit(snapshot_id).alias("snapshot_id"),
-                        F.lit(0).cast("long").alias("input_count"),
-                        F.lit(0).cast("long").alias("kept_count"),
-                        loser_dd.cast("long").alias("dedup_dropped"),
-                        F.col("near_dup_dropped").cast("long")
-                        .alias("near_dup_dropped"),
-                        F.lit(None).cast("map<string,bigint>")
-                        .alias("drop_hist"),
-                        F.lit(None).cast("bigint").alias("checksum"),
-                    )
-                )
-                lin = lin.unionByName(nd_committed)
-            lin.persist()
-            n_buckets_done = lin.count()
+        n_rows = labelled.count()
+        # near_dup can leave no rows while uncommitted buckets remain
+        # (every doc of every uncommitted bucket lost to a
+        # committed-bucket canonical): lineage must still commit those
+        # buckets below or resume would re-run the whole near-dup
+        # chain forever.
+        if n_rows:
+            (
+                labelled.write.mode("append")
+                .partitionBy("bucket")
+                .parquet(output_path)
+            )
+        nd_counts = todo.near_dup_counts
+        lin = lineage_rows(labelled, snapshot_id, nd_counts)
+        if near_dup:
+            # a bucket whose EVERY doc was a near-dup loser has no
+            # surviving rows and thus no lineage row — commit a
+            # zero-count row for it or resume would redo the whole
+            # near-dup chain forever just to rediscover the empty bucket
+            zero = F.lit(0)
+            emptied = todo.fresh_buckets.join(
+                lin.select("bucket"), "bucket", "left_anti")
+            # ADVICE r4: on a resume over an EXTENDED input, a new doc
+            # can lose to a canonical doc whose bucket is already
+            # committed — lineage_rows builds rows from uncommitted
+            # buckets only, so that loser's drop would vanish and the
+            # books (input = processed + dedup_dropped +
+            # near_dup_dropped) silently break. Append a counts-only
+            # lineage row per committed canon bucket carrying its
+            # near-dup drops (and the exact-dedup drops that left with
+            # the losers).
+            nd_committed = nd_counts.where(F.col("bucket").isin(done))
+            lin = lin.unionByName(
+                _counts_only(emptied, snapshot_id, zero, zero)
+            ).unionByName(_counts_only(
+                nd_committed, snapshot_id,
+                F.coalesce(F.col("loser_dedup_dropped"), zero),
+                F.col("near_dup_dropped")))
+        lin.persist()
+        n_buckets_done = lin.count()
+        if n_buckets_done:  # an empty input on a fresh run
             lin.write.mode("append").parquet(metrics_path)
-            lin.unpersist()
-            return {
-                "processed_rows": n_rows,
-                "processed_buckets": n_buckets_done,
-            }
-        finally:
-            todo.unpersist()
+        lin.unpersist()
+        return {
+            "processed_rows": n_rows,
+            "processed_buckets": n_buckets_done,
+        }
     finally:
-        if cached is not None:
-            cached.unpersist()
+        labelled.unpersist()
+        if todo.cached is not None:
+            todo.cached.unpersist()

@@ -28,6 +28,7 @@ import math
 import re
 import zlib
 from functools import lru_cache
+from re._casefix import _EXTRA_CASES  # the table sre compiles IGNORECASE from
 
 import numpy as np
 
@@ -289,6 +290,14 @@ SCRUB_CHAIN: list[tuple[re.Pattern, str]] = [
 
 _DIGITS = "0123456789"
 _TOXIC_WORDS_LOWER = tuple(w.lower() for w in TOXIC_LEXICON)
+# sre's IGNORECASE equates more than simple lowercasing does (ſ ≡ s,
+# ı ≡ i, ...); re compiles patterns from exactly this table, so text
+# holding any extra equivalent of a lexicon character pays the sub
+_CASE_TRAPS = "".join(sorted({
+    chr(x) for w in _TOXIC_WORDS_LOWER for c in w
+    for x in _EXTRA_CASES.get(ord(c), ())}))
+_CASE_TRAP_RE = re.compile(
+    f"[{re.escape(_CASE_TRAPS)}]" if _CASE_TRAPS else "(?!)")
 _HAS_DIGIT = re.compile(r"\d")  # same \d class SSN_RE/PHONE_RE require
 
 
@@ -309,10 +318,11 @@ def scrub_text(text: str) -> str:
     #              simple-case table per char and positions align
     #              (containment is a superset: no word boundaries).
     #              Length-CHANGING lower (e.g. U+0130 → 'i'+combining
-    #              dot) breaks the alignment, so such text skips the
-    #              guard and pays the sub (r6: the guard previously
-    #              required isascii(), leaving every accented doc
-    #              unguarded).
+    #              dot) breaks the alignment, and sre's extra case
+    #              equivalences (ſ ≡ s, ı ≡ i: _CASE_TRAP_RE) match
+    #              chars whose lower() differs, so non-ASCII text with
+    #              either skips the guard and pays the sub. ASCII text
+    #              has neither.
     if "@" in text:
         text = EMAIL_RE.sub("<EMAIL>", text)
     if text.isascii():
@@ -325,8 +335,10 @@ def scrub_text(text: str) -> str:
     # hoist the lowercase copy OUT of the any() — a generator
     # re-evaluates text.lower() per lexicon word otherwise
     lowered = text.lower()
-    if len(lowered) != len(text) or any(
-            w in lowered for w in _TOXIC_WORDS_LOWER):
+    if (any(w in lowered for w in _TOXIC_WORDS_LOWER)
+            or not text.isascii() and (
+                len(lowered) != len(text)
+                or _CASE_TRAP_RE.search(lowered) is not None)):
         text = TOXIC_RE.sub("<TOX>", text)
     return text
 

@@ -1,23 +1,29 @@
 """The north-rule quality-filter pipeline, Spark-first.
 
-Stages (all lazy, one shuffle total — the optional lineage agg):
+Stages of the crawl filter job (lineage.run_incremental composes them):
 
-  web_pages ──▶ extract (Arrow pandas UDF, byte-identical to oracle)
-            ──▶ langid + perplexity (broadcast hashed-ngram weights,
-                one Arrow pandas UDF returning a struct)
-            ──▶ quality metrics (pure Spark SQL expressions — JVM,
-                whole-stage-codegen; no Python)
+  web_pages ──▶ resume filter: drop rows whose bucket is committed
+                (lineage.py; before any shuffle)
+            ──▶ exact dedup: one map-side-combinable min(struct)
+                aggregate on the canonical url — the job's one exchange
+                (none over a table bucketed by url_canon)
+            ──▶ optional near-dup losers (MinHash → Jaccard →
+                connected components), anti-joined out
+            ──▶ fused Arrow pandas UDF: extract → langid + perplexity →
+                quality metrics → scrub, one JVM↔Python crossing,
+                byte-identical to the oracle
             ──▶ drop_reasons / keep (SQL array assembly)
-            ──▶ scrub (Arrow pandas UDF, Python-`re`-pinned)
+            ──▶ optional host blocklist (broadcast dimension join)
 
 Design notes for 100 TB:
-  * The whole pipeline is a narrow map — zero shuffles — so it scales
-    linearly with executors; the only wide op is the lineage groupBy
-    (see lineage.py) on the low-cardinality bucket key.
+  * Everything after the dedup exchange is a narrow map, so it scales
+    linearly with executors; the lineage groupBy (lineage.py) is on the
+    low-cardinality bucket key.
   * Model weights (~5 MB float32) ship once per executor via
     SparkContext.broadcast, not per task.
-  * Metrics are SQL expressions so Catalyst prunes/pushes them and the
-    scan only materializes `html` when extraction actually runs.
+  * The fused UDF tokenizes once and shares the tokens between langid
+    and the metrics; per-process Python scales where JVM-side word
+    arrays contended for one shared heap.
 
 Reference semantics covered (SURVEY.md §2/§7): LM membership scoring →
 perplexity (features.py:337-354), candidate-language scoring → langid,
@@ -27,135 +33,17 @@ argmax inside langid scoring.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .lexicons import ALLOWED_LANGS, STOPWORDS
+from .lexicons import ALLOWED_LANGS
 from .oracle import reference as R
 
-# ---------------------------------------------------------------------------
-# Arrow pandas UDFs (the ONLY Python in the pipeline; all Arrow-batched)
-# ---------------------------------------------------------------------------
-
-
-@F.pandas_udf(T.StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    return html.map(R.extract_text)
-
-
-@F.pandas_udf(T.StringType())
-def scrub_text_udf(text: pd.Series) -> pd.Series:
-    return text.map(R.scrub_text)
-
-
-_LANGID_SCHEMA = T.StructType([
-    T.StructField("lang_pred", T.StringType()),
-    T.StructField("langid_conf", T.DoubleType()),
-    T.StructField("ppl", T.DoubleType()),
-])
-
-
-def make_langid_udf(spark: SparkSession):
-    """Build the langid+ppl pandas UDF with weights broadcast once.
-
-    On a cluster the float32 weight matrix ships to each executor via
-    the torrent broadcast, then every Arrow batch scores against the
-    same in-memory numpy array — no per-task deserialization.
-    """
-    model = R.get_langid_model()
-    bc = spark.sparkContext.broadcast((model.logp, model.langs))
-
-    @F.pandas_udf(_LANGID_SCHEMA)
-    def langid_udf(text: pd.Series) -> pd.DataFrame:
-        m = R.LangIDModel.from_weights(*bc.value)
-        rows = m.score_batch(text)
-        return pd.DataFrame(rows, columns=["lang_pred", "langid_conf", "ppl"])
-
-    return langid_udf
-
-
-# ---------------------------------------------------------------------------
-# Quality metrics — pure Spark SQL (JVM side, codegen)
-# ---------------------------------------------------------------------------
-
-# (?U) pins Java regex to Unicode character classes so \W / \s behave
-# like Python's re.UNICODE — without it "pensée" would lose its accented
-# edge letters and stopword ratios would drift from the oracle.
-_WORD_EDGE = r"(?U)^\W+|\W+$"
+# (?U) pins Java regex to Unicode character classes so \s behaves like
+# Python's re.UNICODE when the near-dup stage splits text into words.
 _WS_SPLIT = r"(?U)\s+"
-_SYMBOL_CLASS = "[@#$%^&*+=<>~|{}\\[\\]\\\\]"
-_SEP = ""  # never occurs in tokens; joins trigrams
-
-
-def _stopword_map_expr() -> Column:
-    """map<lang, array<stopword>> literal, broadcast by constant folding."""
-    args: list[Column] = []
-    for lang in sorted(STOPWORDS):
-        args.append(F.lit(lang))
-        args.append(F.array(*[F.lit(w) for w in STOPWORDS[lang]]))
-    return F.create_map(*args)
-
-
-def with_quality_metrics(df: DataFrame, text_col: str = "extracted_text") -> DataFrame:
-    """Add n_chars, n_words, mean_line_len, symbol_word_ratio,
-    stopword_ratio, repetition_ratio — all JVM-side expressions that
-    reproduce oracle.metrics_for exactly."""
-    t = F.col(text_col)
-    words = F.filter(F.split(F.trim(t), _WS_SPLIT), lambda w: w != F.lit(""))
-    df = (
-        df.withColumn("_words", words)
-        .withColumn("n_chars", F.length(t).cast("int"))
-        .withColumn("n_words", F.size("_words"))
-    )
-    lines = F.split(t, "\n")
-    df = df.withColumn(
-        "mean_line_len",
-        F.when(F.length(t) == 0, F.lit(0.0)).otherwise(
-            F.aggregate(lines, F.lit(0), lambda a, x: a + F.length(x)).cast("double")
-            / F.size(lines)
-        ),
-    )
-    n_sym = F.length(t) - F.length(F.regexp_replace(t, _SYMBOL_CLASS, ""))
-    df = df.withColumn(
-        "symbol_word_ratio",
-        F.when(F.col("n_words") == 0, F.lit(0.0)).otherwise(
-            n_sym.cast("double") / F.col("n_words")
-        ),
-    )
-    stops = F.element_at(_stopword_map_expr(), F.col("lang_pred"))
-    norm = lambda w: F.lower(F.regexp_replace(w, _WORD_EDGE, ""))  # noqa: E731
-    n_stop = F.aggregate(
-        F.col("_words"),
-        F.lit(0),
-        lambda acc, w: acc + F.when(F.array_contains(stops, norm(w)), 1).otherwise(0),
-    )
-    df = df.withColumn(
-        "stopword_ratio",
-        F.when(F.col("n_words") == 0, F.lit(0.0)).otherwise(
-            n_stop.cast("double") / F.col("n_words")
-        ),
-    )
-    tri = F.transform(
-        F.sequence(F.lit(1), F.col("n_words") - 2),
-        lambda i: F.concat_ws(
-            _SEP,
-            F.element_at("_words", i),
-            F.element_at("_words", i + 1),
-            F.element_at("_words", i + 2),
-        ),
-    )
-    df = df.withColumn(
-        "repetition_ratio",
-        F.when(F.col("n_words") < 3, F.lit(0.0)).otherwise(
-            F.lit(1.0) - F.size(F.array_distinct(tri)).cast("double") / F.size(tri)
-        ),
-    )
-    return df.drop("_words")
 
 
 def with_drop_reasons(df: DataFrame) -> DataFrame:
@@ -186,12 +74,18 @@ def with_drop_reasons(df: DataFrame) -> DataFrame:
 N_BUCKETS_DEFAULT = 64
 
 
+def bucket_id(key: Column, n_buckets: int = N_BUCKETS_DEFAULT) -> Column:
+    """pmod(xxhash64(key), N) — THE bucket function. with_bucket,
+    exact_dedup_pages and the resume filter (lineage.run_incremental)
+    all call it, so the bucket a row is filtered on before dedup is the
+    bucket it is written to."""
+    return F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int")
+
+
 def with_bucket(df: DataFrame, n_buckets: int = N_BUCKETS_DEFAULT) -> DataFrame:
     """url-hash bucket — the table's physical partition key (Iceberg
     `bucket(N, url)` transform equivalent)."""
-    return df.withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int")
-    )
+    return df.withColumn("bucket", bucket_id(F.col("url"), n_buckets))
 
 
 def _process_schema(emit_extracted: bool, emit_scrubbed: bool) -> T.StructType:
@@ -214,20 +108,17 @@ def _process_schema(emit_extracted: bool, emit_scrubbed: bool) -> T.StructType:
     return T.StructType(fields)
 
 
-_PROCESS_SCHEMA = _process_schema(True, True)
-
-
 def make_process_html_udf(spark: SparkSession,
                           emit_extracted: bool = True,
                           emit_scrubbed: bool = True):
     """Fused extract→langid→metrics→scrub in ONE Arrow crossing.
 
-    Two scale reasons: (1) the unfused path ships the full document text
-    JVM→Python→JVM three times — 3× the Arrow volume of the hottest
-    column; (2) metrics as JVM SQL expressions allocate word/trigram
-    arrays per row on the shared executor heap — measured to ANTI-scale
-    8→32 local cores from GC contention, while per-process Python
-    scales linearly. The single pass tokenizes once and shares it
+    Two scale reasons: (1) one UDF per stage would ship the full
+    document text JVM→Python→JVM three times — 3× the Arrow volume of
+    the hottest column; (2) metrics as JVM SQL expressions allocate
+    word/trigram arrays per row on the shared executor heap — measured
+    to ANTI-scale 8→32 local cores from GC contention, while
+    per-process Python scales linearly. The single pass tokenizes once and shares it
     between langid and the metrics (see oracle.process_batch).
 
     The emit flags (VERDICT r2 item 6) drop the text fields from the
@@ -249,6 +140,25 @@ def make_process_html_udf(spark: SparkSession,
             emit_scrubbed=emit_scrubbed))
 
     return process_html_udf
+
+
+def output_columns(
+    emit_extracted: bool = True,
+    emit_scrubbed: bool = True,
+    extra_cols: tuple[str, ...] = (),
+) -> list[str]:
+    """Columns quality_pipeline returns, in order — known without
+    building the fused UDF (run_incremental's append-schema guard)."""
+    return [
+        "url", "warc_ts", "bucket", "lang",
+        *(["extracted_text"] if emit_extracted else []),
+        "lang_pred", "langid_conf", "ppl",
+        "n_chars", "n_words", "mean_line_len", "symbol_word_ratio",
+        "stopword_ratio", "repetition_ratio",
+        "drop_reasons", "keep",
+        *(["scrubbed_text"] if emit_scrubbed else []),
+        *extra_cols,
+    ]
 
 
 def quality_pipeline(
@@ -279,19 +189,8 @@ def quality_pipeline(
     df = df.withColumn("_p", process_udf(F.col("html")))
     df = df.select("*", "_p.*").drop("_p")
     df = with_drop_reasons(df)
-    cols = ["url", "warc_ts", "bucket", "lang"]
-    if emit_extracted:
-        cols.append("extracted_text")
-    cols += [
-        "lang_pred", "langid_conf", "ppl",
-        "n_chars", "n_words", "mean_line_len", "symbol_word_ratio",
-        "stopword_ratio", "repetition_ratio",
-        "drop_reasons", "keep",
-    ]
-    if emit_scrubbed:
-        cols.append("scrubbed_text")
-    cols += list(extra_cols)
-    return df.select(*cols)
+    return df.select(*output_columns(
+        emit_extracted, emit_scrubbed, extra_cols))
 
 
 def salted_repartition(df: DataFrame, key: str, salt_buckets: int = 16) -> DataFrame:
@@ -436,8 +335,7 @@ def exact_dedup_pages(
         F.count("*").alias("dup_count"),
     )
     return grouped.select(
-        F.pmod(F.xxhash64("url_canon"), F.lit(n_buckets)).cast("int")
-        .alias("bucket"),
+        bucket_id(F.col("url_canon"), n_buckets).alias("bucket"),
         *[F.col(f"_w.{c}").alias(c) for c in cols],
         "dup_count",
     )

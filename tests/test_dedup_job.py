@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -55,6 +56,54 @@ def test_dedup_runs_before_udf_pass(spark):
     udf_at = plan.index("ArrowEvalPython")
     agg_at = plan.index("partial_min")
     assert udf_at < agg_at, "dedup aggregate must be upstream of the UDF"
+
+
+def _resume_filter_at(plan: str) -> int:
+    """Offset of the committed-bucket filter (NOT bucket IN committed)."""
+    m = re.search(r"Filter NOT .*xxhash64.*(?:INSET|IN) ", plan)
+    assert m, plan
+    return m.start()
+
+
+def test_resume_filter_runs_before_dedup_and_udf(spark):
+    """A resumed job drops committed buckets from the RAW rows: the
+    filter sits below the dedup's partial aggregate and the UDF (plans
+    print top-down), so committed rows cost neither the exchange nor
+    Python."""
+    from lgid_spark.lineage import resume_frames
+
+    pages = spark_web_pages_with_dups(spark, N)
+    todo = resume_frames(spark, pages, [0, 1, 2], N_BUCKETS)
+    plan = todo.labelled._jdf.queryExecution().executedPlan().toString()
+    assert (plan.index("ArrowEvalPython") < plan.index("partial_min")
+            < _resume_filter_at(plan))
+
+
+def test_resume_filter_keeps_bucketed_input_exchange_free(spark, tmp_path):
+    """Over a table bucketed by url_canon the resume filter keeps the
+    scan's layout: the resumed plan up to the UDF has no Exchange."""
+    from lgid_spark.lineage import resume_frames
+    from lgid_spark.pipeline import (
+        register_bucketed_pages,
+        write_bucketed_pages,
+    )
+
+    table = "resume_filter_bucketed_test"
+    path = str(tmp_path / "tbl")
+    try:
+        write_bucketed_pages(spark_web_pages_with_dups(spark, 120), table,
+                             n_buckets=8, path=path)
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+        register_bucketed_pages(spark, table, path, n_buckets=8)
+        todo = resume_frames(spark, spark.table(table), [0, 1, 2], 8,
+                             trust_url_canon=True)
+        plan = todo.labelled._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan
+        assert plan.index("ArrowEvalPython") < _resume_filter_at(plan)
+        assert {r["bucket"] for r in todo.labelled.select("bucket")
+                .distinct().collect()} == set(range(3, 8))
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 def test_run_incremental_dedup_lineage(spark, tmp_path):

@@ -188,3 +188,101 @@ def test_audit_lineage_sound_and_detects_divergence(spark, paths, tmp_path):
     assert [r["bucket"] for r in bad2] == [b0]
     assert bad2[0]["lineage_rows"] == bad2[0]["output_rows"]
     assert bad2[0]["lineage_kept"] != bad2[0]["output_kept"]
+
+
+def _books(spark, metrics):
+    """Per-bucket books summed over every snapshot of a metrics table."""
+    import pyspark.sql.functions as F
+
+    return {
+        r["bucket"]: tuple(r)[1:]
+        for r in spark.read.parquet(metrics).groupBy("bucket").agg(
+            F.sum("input_count"), F.sum("kept_count"),
+            F.sum("dedup_dropped"), F.sum("near_dup_dropped"),
+            F.expr("bit_xor(checksum)")).collect()
+    }
+
+
+def _component_closed_half(spark, pages, near_dup):
+    """Half of the input's buckets, closed under near-dup components.
+
+    A near-dup drop is booked on the canonical doc's bucket, so copying
+    an uninterrupted run's rows is a faithful crash state only if no
+    component straddles the committed/uncommitted line."""
+    from lgid_spark.pipeline import near_dup_losers
+
+    deduped = exact_dedup_pages(pages, N_BUCKETS)
+    parent = {r["bucket"]: r["bucket"]
+              for r in deduped.select("bucket").distinct().collect()}
+
+    def root(b):
+        while parent[b] != b:
+            b = parent[b]
+        return b
+
+    if near_dup:
+        for r in near_dup_losers(deduped).collect():
+            parent[root(r["bucket"])] = root(r["canon_bucket"])
+    groups: dict[int, list[int]] = {}
+    for b in parent:
+        groups.setdefault(root(b), []).append(b)
+    committed: list[int] = []
+    for g in sorted(groups.values(), key=min):
+        if len(committed) + len(g) <= len(parent) // 2:
+            committed += g
+    return sorted(committed)
+
+
+@pytest.mark.parametrize("mode", ["dedup", "no_dedup", "near_dup"])
+def test_crash_resume_equals_uninterrupted(spark, tmp_path, mode):
+    """A crash that committed some buckets, then a resume: the per-bucket
+    books (counts, drops, checksum) equal an uninterrupted run's, and
+    the output audits clean. The resume filter drops committed rows
+    before dedup, so it must not change any winner or near-dup loser."""
+    import pyspark.sql.functions as F
+
+    from lgid_spark.datagen import spark_web_pages_with_dups
+    from lgid_spark.lineage import audit_lineage
+
+    kw = {"dedup": mode != "no_dedup", "near_dup": mode == "near_dup"}
+    pages = spark_web_pages_with_dups(spark, 120)
+    ref_out, ref_met = str(tmp_path / "ref_out"), str(tmp_path / "ref_met")
+    ref = run_incremental(spark, pages, ref_out, ref_met, "ref",
+                          N_BUCKETS, **kw)
+    committed = _component_closed_half(spark, pages, kw["near_dup"])
+    assert committed
+
+    out, met = tmp_path / "out", str(tmp_path / "met")
+    for b in committed:
+        src = tmp_path / "ref_out" / f"bucket={b}"
+        if src.exists():
+            shutil.copytree(src, out / src.name)
+    (spark.read.parquet(ref_met).where(F.col("bucket").isin(committed))
+     .write.parquet(met))
+    res = run_incremental(spark, pages, str(out), met, "resume",
+                          N_BUCKETS, **kw)
+    ref_rows = spark.read.parquet(ref_out)
+    assert res["processed_rows"] == ref_rows.where(
+        ~F.col("bucket").isin(committed)).count() > 0
+    assert res["processed_rows"] < ref["processed_rows"]
+    assert _books(spark, met) == _books(spark, ref_met)
+    assert audit_lineage(spark, str(out), met).count() == 0
+
+
+@pytest.mark.parametrize("kw", [{}, {"dedup": False}, {"near_dup": True}])
+def test_noop_rerun_never_evaluates_html(spark, paths, kw):
+    """Re-running a complete dataset is decided by the committed-bucket
+    probe alone: no dedup, no UDF, no near-dup chain — proven by an
+    input whose html column raises if it is ever evaluated."""
+    import pyspark.sql.functions as F
+
+    out, metrics = paths
+    pages = spark_web_pages(spark, 120)
+    run_incremental(spark, pages, out, metrics, "snap1", N_BUCKETS, **kw)
+    poisoned = pages.withColumn(
+        "html", F.raise_error(F.lit("html evaluated")).cast("binary"))
+    with pytest.raises(Exception, match="html evaluated"):
+        poisoned.select("html").collect()
+    r = run_incremental(spark, poisoned, out, metrics, "snap2",
+                        N_BUCKETS, **kw)
+    assert r == {"processed_rows": 0, "processed_buckets": 0}

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from lgid_spark.fixtures import LANG_TABLE
@@ -111,10 +112,18 @@ def _scrub_unguarded(text: str) -> str:
     return text
 
 
+# sre's IGNORECASE equates these with s / i; str.lower() does not
+_SRE_CASE_TWINS = {"s": "ſ", "i": "ı"}
+_sre_twin_words = [
+    w.replace(a, b) for w in TOXIC_LEXICON
+    for a, b in _SRE_CASE_TWINS.items() if a in w]
+
 _scrub_atoms = st.sampled_from(
     [w.upper() for w in TOXIC_LEXICON]
     + [w.title() for w in TOXIC_LEXICON]
     + [f"x{w}y" for w in TOXIC_LEXICON]  # inside a word: \b must NOT fire
+    + _sre_twin_words + [w.upper() for w in _sre_twin_words]
+    + [f"x{w}y" for w in _sre_twin_words]
     + ["a@b.co", "555-12-3456", "(555) 123-4567", "İ", "ſ", "ǂkx'a",
        "no digits here", "123", "plain words only", "İNSULT"]
 )
@@ -126,6 +135,14 @@ _scrub_atoms = st.sampled_from(
 def test_scrub_guards_equal_unguarded_chain(parts, noise):
     text = " ".join(parts + [noise])
     assert scrub_text(text) == _scrub_unguarded(text)
+
+
+@pytest.mark.parametrize("text", ["a ſnibwort b", "a snıbwort b", "blargfeſt"])
+def test_scrub_sre_case_twins(text):
+    """TOXIC_RE matches these although no lexicon word is contained in
+    text.lower(); the guard must still let the sub run."""
+    assert TOXIC_RE.search(text)
+    assert scrub_text(text) == _scrub_unguarded(text) != text
 
 
 from lgid_spark.oracle.reference import (  # noqa: E402

@@ -44,8 +44,8 @@ def test_cos_and_dot_bitwise(spark, emb):
         old_cos.alias("o"), V.cos_seq_udf("embedding", "pvec").alias("n"),
         _dot(F.col("embedding"), F.col("pvec")).alias("od"),
         V.seq_dot_udf("embedding", "pvec").alias("nd"))
-    assert d.where((F.col("o") != F.col("n"))
-                   | (F.col("od") != F.col("nd"))).count() == 0
+    assert d.where(~F.col("o").eqNullSafe(F.col("n"))
+                   | ~F.col("od").eqNullSafe(F.col("nd"))).count() == 0
 
 
 def test_d2_bitwise(spark, emb):
@@ -61,7 +61,7 @@ def test_d2_bitwise(spark, emb):
             - F.element_at(F.col("cvec"), i).cast("double")) ** 2)
     d = pairs.select(old_d2.alias("o"),
                      V.d2_seq_udf("embedding", "cvec").alias("n"))
-    assert d.where(F.col("o") != F.col("n")).count() == 0
+    assert d.where(~F.col("o").eqNullSafe(F.col("n"))).count() == 0
 
 
 def test_sig_norm_bitwise(spark, emb):
@@ -74,8 +74,8 @@ def test_sig_norm_bitwise(spark, emb):
         F.sqrt(_dot64(F.col("embedding"), F.col("embedding"))).alias("onorm"),
         sn("embedding").alias("p"),
     ).select("osig", "onorm", "p.sig", "p.norm")
-    assert d.where((F.col("osig") != F.col("sig"))
-                   | (F.col("onorm") != F.col("norm"))).count() == 0
+    assert d.where(~F.col("osig").eqNullSafe(F.col("sig"))
+                   | ~F.col("onorm").eqNullSafe(F.col("norm"))).count() == 0
 
 
 def test_minhash_bitwise(spark, docs):
@@ -93,7 +93,7 @@ def test_minhash_bitwise(spark, docs):
     )
     cond = None
     for k in range(8):
-        c = F.col(f"o{k}") != F.col(f"h.h{k}")
+        c = ~F.col(f"o{k}").eqNullSafe(F.col(f"h.h{k}"))
         cond = c if cond is None else cond | c
     assert d.where(cond).count() == 0
 
@@ -129,5 +129,20 @@ def test_simhash_bitwise(spark, docs, bits, hexc):
     )
     j = old.join(new, "doc_id", "full")
     assert j.where(
-        F.col("o").isNull() | F.col("n").isNull()
-        | (F.col("o") != F.col("n"))).count() == 0
+        F.col("o").isNull() | ~F.col("o").eqNullSafe(F.col("n"))).count() == 0
+
+
+def test_sig_kernels_empty_batch():
+    """An empty Arrow batch yields empty results, not a broadcast
+    error between a (0, 0) matrix and the (dim,) sign rows."""
+    import pandas as pd
+
+    from lgid_spark.functions import vecfold as V
+    from lgid_spark.queries.coverage import _DUP_SIGNS
+
+    empty = pd.Series([], dtype=object)
+    sn = V.make_sig_norm_udf(_DUP_SIGNS).func(empty)
+    assert list(sn.columns) == ["sig", "norm"] and len(sn) == 0
+    assert len(V.make_sig_udf(_DUP_SIGNS).func(empty)) == 0
+    assert len(V.cos_seq_udf.func(empty, empty)) == 0
+    assert len(V.d2_seq_udf.func(empty, empty)) == 0
