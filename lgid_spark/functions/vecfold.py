@@ -24,13 +24,29 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def _mat(s: pd.Series, dim: int = 0) -> np.ndarray:
-    """Series of fixed-width float arrays → (n, dim) float64 matrix
-    (float32 → float64 widening is exact, same as the SQL cast); an
-    empty batch is (0, dim), so it broadcasts against (dim,) rows."""
-    if len(s) == 0:
-        return np.empty((0, dim), dtype=np.float64)
-    return np.stack(s.to_numpy()).astype(np.float64)
+def _mats(*cols: pd.Series, dim: int = 0):
+    """Array columns → equal-width (n, w) float64 matrices (float32 →
+    float64 widening is exact, same as the SQL cast) and the (n,) mask
+    of rows every column holds at width w — ``dim``, else the widest
+    array in the batch. A NULL or ragged row is zero-filled and masked
+    out, so it cannot break the batch: a fold over it is NULL (as the
+    Catalyst fold over a NULL array) and its RP-LSH signature 0 (as the
+    SQL CASE WHEN fold > 0 form). An empty batch is (0, w), so it
+    broadcasts against (dim,) rows."""
+    lens = [s.map(len, na_action="ignore").fillna(-1).to_numpy()
+            for s in cols]
+    w = dim or int(max((n.max() for n in lens if len(n)), default=0))
+    ok = np.logical_and.reduce([n == w for n in lens])
+    mats = [np.zeros((len(s), w)) for s in cols]
+    if ok.any():
+        for M, s in zip(mats, cols):
+            M[ok] = np.stack(s[ok].to_numpy())
+    return mats, ok
+
+
+def _null_unless(ok: np.ndarray, v: np.ndarray) -> pd.Series:
+    """v as a Series, NULL where ``ok`` is False."""
+    return pd.Series(v).where(ok)
 
 
 def _seq_sum(P: np.ndarray) -> np.ndarray:
@@ -50,16 +66,19 @@ def seq_dot(A: np.ndarray, B: np.ndarray) -> np.ndarray:
 @F.pandas_udf(T.DoubleType())
 def seq_dot_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     """Σ_i a[i]·b[i], sequential double fold order."""
-    return pd.Series(seq_dot(_mat(a), _mat(b)))
+    (A, B), ok = _mats(a, b)
+    return _null_unless(ok, seq_dot(A, B))
 
 
 @F.pandas_udf(T.DoubleType())
 def cos_seq_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     """dot(a,b) / (sqrt(dot(a,a)) · sqrt(dot(b,b))) — every operation
     elementwise IEEE double, fold order sequential (≡ the SQL form)."""
-    A, B = _mat(a), _mat(b)
-    return pd.Series(
-        seq_dot(A, B) / (np.sqrt(seq_dot(A, A)) * np.sqrt(seq_dot(B, B))))
+    (A, B), ok = _mats(a, b)
+    with np.errstate(invalid="ignore"):  # 0/0 of a masked-out row
+        cos = seq_dot(A, B) / (
+            np.sqrt(seq_dot(A, A)) * np.sqrt(seq_dot(B, B)))
+    return _null_unless(ok, cos)
 
 
 @F.pandas_udf(T.DoubleType())
@@ -67,8 +86,8 @@ def d2_seq_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     """Σ_i (a[i]−b[i])², sequential. The square is computed as pow(d, 2)
     exactly like the SQL `** 2` (JVM Math.pow(d, 2.0) == d·d == numpy
     d**2 for all finite doubles — pinned by tests/test_vecfold.py)."""
-    D = _mat(a) - _mat(b)
-    return pd.Series(_seq_sum(D * D))
+    (A, B), ok = _mats(a, b)
+    return _null_unless(ok, _seq_sum((A - B) ** 2))
 
 
 def make_sig_norm_udf(signs: list[list[float]]):
@@ -86,13 +105,13 @@ def make_sig_norm_udf(signs: list[list[float]]):
 
     @F.pandas_udf(schema)
     def sig_norm_udf(emb: pd.Series) -> pd.DataFrame:
-        E = _mat(emb, S.shape[1])
+        (E,), ok = _mats(emb, dim=S.shape[1])
         sig = np.zeros(len(emb), dtype=np.int64)
         for k in range(n_planes):
             proj = _seq_sum(E * S[k])
             sig += (proj > 0).astype(np.int64) << k
         norm = np.sqrt(_seq_sum(E * E))
-        return pd.DataFrame({"sig": sig, "norm": norm})
+        return pd.DataFrame({"sig": sig, "norm": _null_unless(ok, norm)})
 
     return sig_norm_udf
 
@@ -104,7 +123,7 @@ def make_sig_udf(signs: list[list[float]]):
 
     @F.pandas_udf(T.IntegerType())
     def sig_udf(emb: pd.Series) -> pd.Series:
-        E = _mat(emb, S.shape[1])
+        (E,), _ = _mats(emb, dim=S.shape[1])
         sig = np.zeros(len(emb), dtype=np.int64)
         for k in range(n_planes):
             proj = _seq_sum(E * S[k])

@@ -4,8 +4,14 @@ Every pipeline run appends one lineage row per url-hash bucket to a
 metrics table:
 
     bucket int, snapshot_id string, input_count long, kept_count long,
+    dedup_dropped long, near_dup_dropped long,
     drop_hist map<string,long>, checksum long
 
+* One per-bucket summary (``bucket_summary``: a single groupBy on the
+  bucket) computes the counts, the drop-reason histogram and the
+  checksum from rows. The lineage write and the audit both call it,
+  so the books are computed one way; the run collects its at most N
+  lineage rows once and writes them as one metrics file.
 * ``checksum`` is an order-insensitive fold: bit_xor of
   xxhash64(url || scrubbed_text) over the bucket — two runs that
   produced byte-identical output per url have equal checksums no
@@ -34,6 +40,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .pipeline import (
+    DROP_REASONS,
     apply_domain_blocklist,
     bucket_id,
     canonical_url,
@@ -52,66 +59,61 @@ METRICS_SCHEMA = (
 )
 
 
+def bucket_summary(df: DataFrame) -> DataFrame:
+    """The per-bucket books of a labelled or output frame, as ONE
+    groupBy("bucket") aggregate: input_count, kept_count,
+    dedup_dropped, drop_hist and checksum.
+
+    ``dedup_dropped`` is Σ(dup_count − 1) — the duplicate
+    spellings/copies the exact-dedup stage collapsed — or 0 without a
+    dup_count column. ``drop_hist`` counts each reason of
+    pipeline.DROP_REASONS with count_if (a row holds a reason at most
+    once), keeps the non-zero counts and is NULL for a bucket without
+    drops. ``checksum`` is NULL for a frame without scrubbed_text (a
+    labels-only output cannot reproduce the fold). Consumers select
+    what they need; Catalyst prunes the other aggregates."""
+    counts = F.array(*[
+        F.count_if(F.array_contains("drop_reasons", r))
+        for r in DROP_REASONS])
+    hist = F.map_filter(
+        F.map_from_arrays(F.array(*map(F.lit, DROP_REASONS)), counts),
+        lambda _, v: v > 0)
+    return df.groupBy("bucket").agg(
+        F.count("*").alias("input_count"),
+        F.sum(F.col("keep").cast("long")).alias("kept_count"),
+        (F.sum(F.col("dup_count") - 1) if "dup_count" in df.columns
+         else F.lit(0)).cast("long").alias("dedup_dropped"),
+        F.when(F.size(hist) > 0, hist).alias("drop_hist"),
+        (F.expr("bit_xor(xxhash64(concat(url, scrubbed_text)))")
+         if "scrubbed_text" in df.columns
+         else F.lit(None).cast("bigint")).alias("checksum"),
+    )
+
+
 def lineage_rows(
     labelled: DataFrame,
     snapshot_id: str,
     near_dup_counts: DataFrame | None = None,
 ) -> DataFrame:
-    """One row per bucket: counts, dedup drops, drop-reason histogram,
-    checksum.
-
-    Single shuffle on the low-cardinality bucket key; the histogram is
-    built map-side-combinable (explode → count → map_from_entries).
-    ``dedup_dropped`` comes from the exact-dedup stage's dup_count
-    column when present (Σ(dup_count − 1) per bucket — how many
-    duplicate spellings/copies were collapsed before the UDF pass);
-    ``near_dup_counts`` is the optional (bucket, near_dup_dropped)
-    frame from the near-dup stage."""
-    has_dup = "dup_count" in labelled.columns
-    base = labelled.select(
-        "bucket", "url", "keep", "drop_reasons", "scrubbed_text",
-        *(["dup_count"] if has_dup else []),
-    )
-    dedup_agg = (
-        F.sum(F.col("dup_count") - 1) if has_dup else F.lit(0)
-    ).cast("long").alias("dedup_dropped")
-    counts = base.groupBy("bucket").agg(
-        F.count("*").alias("input_count"),
-        F.sum(F.col("keep").cast("long")).alias("kept_count"),
-        dedup_agg,
-        F.expr("bit_xor(xxhash64(concat(url, scrubbed_text)))").alias("checksum"),
-    )
-    hist = (
-        base.select("bucket", F.explode("drop_reasons").alias("reason"))
-        .groupBy("bucket", "reason")
-        .agg(F.count("*").alias("n"))
-        .groupBy("bucket")
-        .agg(
-            F.map_from_entries(
-                F.sort_array(F.collect_list(F.struct("reason", "n")))
-            ).alias("drop_hist")
-        )
-    )
-    out = counts.join(hist, "bucket", "left")
+    """One metrics row per bucket of ``labelled``: its bucket_summary
+    (one exchange, on the low-cardinality bucket key) tagged with the
+    snapshot, plus ``near_dup_counts`` — the optional (bucket,
+    near_dup_dropped, loser_dedup_dropped) frame of the near-dup stage,
+    joined by broadcast."""
+    out = bucket_summary(labelled)
+    nd = F.lit(0).cast("long")
     if near_dup_counts is not None:
-        out = out.drop("near_dup_dropped").join(
-            F.broadcast(near_dup_counts), "bucket", "left")
+        out = out.join(F.broadcast(near_dup_counts), "bucket", "left")
         nd = F.coalesce(F.col("near_dup_dropped"), F.lit(0)).cast("long")
-        if "loser_dedup_dropped" in near_dup_counts.columns:
-            # dedup drops that left the labelled frame with the losers
-            out = out.withColumn(
-                "dedup_dropped",
-                F.col("dedup_dropped")
-                + F.coalesce(F.col("loser_dedup_dropped"), F.lit(0)))
-    else:
-        nd = F.lit(0).cast("long")
-    return (
-        out.withColumn("near_dup_dropped", nd)
-        .withColumn("snapshot_id", F.lit(snapshot_id))
-        .select(
-            "bucket", "snapshot_id", "input_count", "kept_count",
-            "dedup_dropped", "near_dup_dropped", "drop_hist", "checksum",
-        )
+        # dedup drops that left the labelled frame with the losers
+        out = out.withColumn(
+            "dedup_dropped",
+            F.col("dedup_dropped")
+            + F.coalesce(F.col("loser_dedup_dropped"), F.lit(0)))
+    return out.select(
+        "bucket", F.lit(snapshot_id).alias("snapshot_id"), "input_count",
+        "kept_count", "dedup_dropped", nd.alias("near_dup_dropped"),
+        "drop_hist", "checksum",
     )
 
 
@@ -119,11 +121,11 @@ def audit_lineage(
     spark: SparkSession, output_path: str, metrics_path: str
 ) -> DataFrame:
     """Integrity audit over a (possibly multi-snapshot, resumed) run:
-    recompute per-bucket row count, kept count, and the
-    order-insensitive checksum from the OUTPUT table and diff them
-    against the committed lineage. Returns one row per disagreeing
-    bucket (empty frame = books are sound) with both sides of every
-    number — the operator-facing check that a crash/retry or a
+    the OUTPUT table's bucket_summary — the same aggregate that wrote
+    the lineage — diffed against the committed lineage per bucket (row
+    count, kept count, order-insensitive checksum). Returns one row per
+    disagreeing bucket (empty frame = books are sound) with both sides
+    of every number — the operator-facing check that a crash/retry or a
     concurrent writer didn't leave the output and the metrics table
     telling different stories.
 
@@ -131,13 +133,14 @@ def audit_lineage(
     only uncommitted buckets) plus possibly counts-only rows
     (zero-count rows for emptied buckets; near-dup drop carriers for
     committed canon buckets) — summing counts and bit_xor-ing the
-    non-null checksums per bucket collapses them correctly. The
-    comparison is one shuffle per side on the low-cardinality bucket
-    key; the output-side scan reads only (bucket, url, keep,
-    scrubbed_text). A path that was never created (a run whose rows
-    all vanished before the write) counts as an empty table, so a
-    missing output with committed lineage reports every lineage
-    bucket — and nothing-vs-nothing is sound."""
+    non-null checksums per bucket collapses them correctly. Output
+    side: the summary's unused aggregates are pruned, so the scan
+    reads only (bucket, url, keep, scrubbed_text); a labels-only
+    output has a NULL checksum and is audited on counts. A path that
+    was never created (a run whose rows all vanished before the write)
+    counts as an empty table, so a missing output with committed
+    lineage reports every lineage bucket — and nothing-vs-nothing is
+    sound."""
     if not _path_exists(spark, metrics_path):
         lin_src = spark.createDataFrame(
             [], "bucket int, input_count long, kept_count long, "
@@ -155,19 +158,14 @@ def audit_lineage(
     if not _path_exists(spark, output_path):
         out = spark.createDataFrame(
             [], "bucket int, url string, keep boolean, "
-                "scrubbed_text string")
+                "drop_reasons array<string>, scrubbed_text string")
     else:
         out = spark.read.parquet(output_path)
-    if "scrubbed_text" not in out.columns:
-        # labels-only output cannot reproduce the url||scrubbed_text
-        # fold — audit counts only
-        checksum = F.lit(None).cast("bigint")
-    else:
-        checksum = F.expr("bit_xor(xxhash64(concat(url, scrubbed_text)))")
-    got = out.groupBy("bucket").agg(
-        F.count("*").alias("output_rows"),
-        F.sum(F.col("keep").cast("long")).alias("output_kept"),
-        checksum.alias("output_checksum"),
+    got = bucket_summary(out).select(
+        "bucket",
+        F.col("input_count").alias("output_rows"),
+        F.col("kept_count").alias("output_kept"),
+        F.col("checksum").alias("output_checksum"),
     )
     joined = lin.join(got, "bucket", "full_outer")
     zero = lambda c: F.coalesce(F.col(c), F.lit(0))  # noqa: E731
@@ -376,19 +374,11 @@ def resume_frames(
     return Todo(labelled, nd_counts, fresh_buckets, cached)
 
 
-def _counts_only(df: DataFrame, snapshot_id: str, dedup_dropped: Column,
-                 near_dup_dropped: Column) -> DataFrame:
-    """Lineage rows that carry drop counts but no output rows."""
-    return df.select(
-        "bucket",
-        F.lit(snapshot_id).alias("snapshot_id"),
-        F.lit(0).cast("long").alias("input_count"),
-        F.lit(0).cast("long").alias("kept_count"),
-        dedup_dropped.cast("long").alias("dedup_dropped"),
-        near_dup_dropped.cast("long").alias("near_dup_dropped"),
-        F.lit(None).cast("map<string,bigint>").alias("drop_hist"),
-        F.lit(None).cast("bigint").alias("checksum"),
-    )
+def _counts_only(bucket: int, snapshot_id: str, dedup_dropped: int = 0,
+                 near_dup_dropped: int = 0) -> tuple:
+    """A lineage row that carries drop counts but no output rows."""
+    return (bucket, snapshot_id, 0, 0, dedup_dropped, near_dup_dropped,
+            None, None)
 
 
 def run_incremental(
@@ -413,9 +403,11 @@ def run_incremental(
     the two append-schema guards, one read of the committed bucket ids
     and one probe — no dedup exchange, no fused UDF, no model
     broadcast. Rows of committed buckets are filtered out of the raw
-    input before anything else (resume_frames). Crash between the
-    output write and the metrics write re-processes the affected
-    buckets on retry; downstream readers must key on the metrics table
+    input before anything else (resume_frames). The lineage rows (at
+    most N) are collected once; the output is written first, then the
+    rows as one metrics file. Crash between the output write and the
+    metrics write re-processes the affected buckets on retry;
+    downstream readers must key on the metrics table
     (standard write-ahead-commit pattern — with real Iceberg both
     writes share one transaction).
 
@@ -460,31 +452,32 @@ def run_incremental(
         stage_path=stage_path)
     if todo is None:
         return {"processed_rows": 0, "processed_buckets": 0}
-    # cache: output write and lineage agg share the expensive UDF pass
+    # cache: the lineage aggregate and the output write share the
+    # expensive UDF pass
     labelled = todo.labelled.persist()
     try:
-        n_rows = labelled.count()
-        # near_dup can leave no rows while uncommitted buckets remain
-        # (every doc of every uncommitted bucket lost to a
-        # committed-bucket canonical): lineage must still commit those
-        # buckets below or resume would re-run the whole near-dup
-        # chain forever.
+        nd_counts = todo.near_dup_counts
+        rows = lineage_rows(labelled, snapshot_id, nd_counts).collect()
+        n_rows = sum(r.input_count for r in rows)
+        # write-ahead: the output lands before the metrics that commit it
         if n_rows:
             (
                 labelled.write.mode("append")
                 .partitionBy("bucket")
                 .parquet(output_path)
             )
-        nd_counts = todo.near_dup_counts
-        lin = lineage_rows(labelled, snapshot_id, nd_counts)
         if near_dup:
-            # a bucket whose EVERY doc was a near-dup loser has no
-            # surviving rows and thus no lineage row — commit a
-            # zero-count row for it or resume would redo the whole
-            # near-dup chain forever just to rediscover the empty bucket
-            zero = F.lit(0)
-            emptied = todo.fresh_buckets.join(
-                lin.select("bucket"), "bucket", "left_anti")
+            # near_dup can leave no rows while uncommitted buckets remain
+            # (every doc of every uncommitted bucket lost to a
+            # committed-bucket canonical), and a bucket whose EVERY doc
+            # was a near-dup loser has no surviving rows and thus no
+            # lineage row — commit a zero-count row for it or resume
+            # would redo the whole near-dup chain forever just to
+            # rediscover the empty bucket
+            seen = {r.bucket for r in rows}
+            rows += [_counts_only(b, snapshot_id)
+                     for (b,) in todo.fresh_buckets.collect()
+                     if b not in seen]
             # ADVICE r4: on a resume over an EXTENDED input, a new doc
             # can lose to a canonical doc whose bucket is already
             # committed — lineage_rows builds rows from uncommitted
@@ -494,22 +487,17 @@ def run_incremental(
             # lineage row per committed canon bucket carrying its
             # near-dup drops (and the exact-dedup drops that left with
             # the losers).
-            nd_committed = nd_counts.where(F.col("bucket").isin(done))
-            lin = lin.unionByName(
-                _counts_only(emptied, snapshot_id, zero, zero)
-            ).unionByName(_counts_only(
-                nd_committed, snapshot_id,
-                F.coalesce(F.col("loser_dedup_dropped"), zero),
-                F.col("near_dup_dropped")))
-        lin.persist()
-        n_buckets_done = lin.count()
-        if n_buckets_done:  # an empty input on a fresh run
-            lin.write.mode("append").parquet(metrics_path)
-        lin.unpersist()
-        return {
-            "processed_rows": n_rows,
-            "processed_buckets": n_buckets_done,
-        }
+            rows += [_counts_only(r.bucket, snapshot_id,
+                                  r.loser_dedup_dropped or 0,
+                                  r.near_dup_dropped)
+                     for r in nd_counts.where(
+                         F.col("bucket").isin(done)).collect()]
+        if rows:  # none for an empty input on a fresh run
+            (
+                spark.createDataFrame(rows, METRICS_SCHEMA).coalesce(1)
+                .write.mode("append").parquet(metrics_path)
+            )
+        return {"processed_rows": n_rows, "processed_buckets": len(rows)}
     finally:
         labelled.unpersist()
         if todo.cached is not None:

@@ -45,6 +45,12 @@ from .oracle import reference as R
 # Python's re.UNICODE when the near-dup stage splits text into words.
 _WS_SPLIT = r"(?U)\s+"
 
+# Every reason a drop_reasons array can hold: the six rules of
+# with_drop_reasons plus apply_domain_blocklist's, sorted (the
+# lineage drop_hist has one count per reason, in this order).
+DROP_REASONS = ("bad_lang", "blocked_domain", "high_perplexity",
+                "low_stopword", "repetitive", "too_short", "too_symbolic")
+
 
 def with_drop_reasons(df: DataFrame) -> DataFrame:
     """Assemble drop_reasons (alphabetical, matching the oracle's sort)

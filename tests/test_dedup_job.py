@@ -345,14 +345,18 @@ def test_run_filter_cli_dedup(spark, tmp_path, capsys):
 def test_run_filter_cli_blocklist(spark, tmp_path, capsys):
     """--blocklist composes into the job: blocked hosts' rows are
     written keep=false with a 'blocked_domain' reason, and the reason
-    lands in the lineage drop_hist like any built-in rule."""
+    lands in the lineage drop_hist like any built-in rule. The input
+    triggers every reason, so per bucket the drop_hist values sum to
+    the output's Σ size(drop_reasons) only if DROP_REASONS lists them
+    all."""
     from lgid_spark.jobs.run_filter import main
+    from lgid_spark.pipeline import DROP_REASONS
 
     bl = tmp_path / "blocked.txt"
     bl.write_text("# UT1-style list\nhost0.example\n")
     out, metrics = str(tmp_path / "out"), str(tmp_path / "metrics")
     rc = main([
-        "--input", "synth:80", "--output", out, "--metrics", metrics,
+        "--input", "synth:120", "--output", out, "--metrics", metrics,
         "--snapshot-id", "bl-snap", "--buckets", "8",
         "--blocklist", str(bl),
     ])
@@ -366,6 +370,12 @@ def test_run_filter_cli_blocklist(spark, tmp_path, capsys):
     total = sum((r["drop_hist"] or {}).get("blocked_domain", 0)
                 for r in hist)
     assert total == len(blocked)
+    assert {x for r in rows for x in r["drop_reasons"]} == set(DROP_REASONS)
+    want: dict[int, int] = {}
+    for r in rows:
+        want[r["bucket"]] = want.get(r["bucket"], 0) + len(r["drop_reasons"])
+    assert {r["bucket"]: sum((r["drop_hist"] or {}).values())
+            for r in hist} == want
 
 
 def test_near_dup_hot_bucket_cap(spark):

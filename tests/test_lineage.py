@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
@@ -84,9 +85,73 @@ def test_drop_hist_matches_oracle(spark):
             want[r] = want.get(r, 0) + 1
     got: dict[str, int] = {}
     for row in lin:
+        assert row["drop_hist"] != {}  # no drops is NULL, not an empty map
         for k, v in (row["drop_hist"] or {}).items():
             got[k] = got.get(k, 0) + v
     assert got == want
+
+
+def test_lineage_rows_is_one_aggregate(spark):
+    """The per-bucket summary is ONE aggregate: a single exchange on
+    the bucket key, no second drop-reason aggregate joined back."""
+    lab = quality_pipeline(spark, spark_web_pages(spark, N),
+                           n_buckets=N_BUCKETS)
+    plan = lineage_rows(lab, "s")._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+    assert "Join" not in plan, plan
+
+
+def test_drop_hist_null_without_drops(spark):
+    """A bucket whose rows all pass has drop_hist NULL; the others
+    count only the reasons that occur."""
+    lab = spark.createDataFrame(
+        [(0, "u0", True, [], "a"),
+         (1, "u1", False, ["too_short"], "b"),
+         (1, "u2", False, ["bad_lang", "too_short"], "c"),
+         (1, "u3", True, [], "d")],
+        "bucket int, url string, keep boolean, drop_reasons array<string>, "
+        "scrubbed_text string")
+    got = {r["bucket"]: (r["input_count"], r["kept_count"], r["drop_hist"])
+           for r in lineage_rows(lab, "s").collect()}
+    assert got == {0: (1, 1, None),
+                   1: (3, 1, {"bad_lang": 1, "too_short": 2})}
+
+
+def test_one_metrics_file_per_run_written_after_output(spark, paths,
+                                                       monkeypatch):
+    """A run collects its lineage rows once and appends them as ONE
+    metrics file, after the output write (write-ahead order): a fresh
+    run leaves one file, a resume adds one more."""
+    import pyspark.sql.functions as F
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from lgid_spark.pipeline import bucket_id, canonical_url
+
+    out, metrics = paths
+    writes: list[str] = []
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *a, **kw):
+        writes.append(path)
+        return parquet(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+
+    def n_files():
+        return sum(f.endswith(".parquet") for f in os.listdir(metrics))
+
+    pages = spark_web_pages(spark, N)
+    half = pages.where(
+        bucket_id(canonical_url(F.col("url")), N_BUCKETS) < N_BUCKETS // 2)
+    r1 = run_incremental(spark, half, out, metrics, "snap1", N_BUCKETS)
+    assert r1["processed_buckets"] == N_BUCKETS // 2
+    assert n_files() == 1
+    r2 = run_incremental(spark, pages, out, metrics, "snap2", N_BUCKETS)
+    assert r2["processed_buckets"] == N_BUCKETS // 2
+    assert r1["processed_rows"] + r2["processed_rows"] == N
+    assert n_files() == 2
+    assert writes == [out, metrics, out, metrics]
 
 
 def test_bucket_partition_pruning_on_readback(spark, tmp_path):

@@ -146,3 +146,96 @@ def test_sig_kernels_empty_batch():
     assert len(V.make_sig_udf(_DUP_SIGNS).func(empty)) == 0
     assert len(V.cos_seq_udf.func(empty, empty)) == 0
     assert len(V.d2_seq_udf.func(empty, empty)) == 0
+
+
+def test_vecfold_null_rows_match_catalyst(spark, emb):
+    """A NULL array row yields what the F.aggregate originals give —
+    NULL folds, a 0 signature — and leaves the other rows of its batch
+    bitwise unchanged."""
+    from lgid_spark.functions import vecfold as V
+    from lgid_spark.queries.coverage import (
+        _DUP_SIGNS,
+        _dot64,
+        _dup_sig_col,
+    )
+    from lgid_spark.queries.similarity import DIM, _dot
+
+    holed = emb.select(F.when(F.col("vec_id") % 3 != 0, F.col("embedding"))
+                       .alias("embedding"))
+    probes = emb.limit(3).select(F.col("embedding").alias("pvec"))
+    pairs = holed.crossJoin(F.broadcast(probes))
+    e, p = F.col("embedding"), F.col("pvec")
+    old_d2 = F.aggregate(
+        F.sequence(F.lit(1), F.lit(DIM)), F.lit(0.0),
+        lambda acc, i: acc + (
+            F.element_at(e, i).cast("double")
+            - F.element_at(p, i).cast("double")) ** 2)
+    sn = V.make_sig_norm_udf(_DUP_SIGNS)
+    d = pairs.select(
+        _dot(e, p).alias("od"), V.seq_dot_udf(e, p).alias("nd"),
+        (_dot(e, p) / (F.sqrt(_dot(e, e)) * F.sqrt(_dot(p, p)))).alias("oc"),
+        V.cos_seq_udf(e, p).alias("nc"),
+        old_d2.alias("o2"), V.d2_seq_udf(e, p).alias("n2"),
+        _dup_sig_col().alias("osig"), F.sqrt(_dot64(e, e)).alias("onorm"),
+        sn(e).alias("s"),
+    )
+    assert d.where(F.col("od").isNull()).count() > 0
+    mismatch = [("od", "nd"), ("oc", "nc"), ("o2", "n2"),
+                ("osig", "s.sig"), ("onorm", "s.norm")]
+    cond = None
+    for o, n in mismatch:
+        c = ~F.col(o).eqNullSafe(F.col(n))
+        cond = c if cond is None else cond | c
+    assert d.where(cond).count() == 0
+
+
+def test_vecfold_ragged_rows_are_null():
+    """A row of another width than the batch gives NULL folds instead
+    of failing np.stack for the whole batch; the other rows keep their
+    values."""
+    import numpy as np
+    import pandas as pd
+
+    from lgid_spark.functions import vecfold as V
+    from lgid_spark.queries.coverage import _DUP_SIGNS
+
+    rng = np.random.default_rng(0)
+    good = [rng.standard_normal(64).astype(np.float32) for _ in range(3)]
+    short = good[0][:63]
+    a = pd.Series([good[0], short, None, good[1]], dtype=object)
+    b = pd.Series([good[2], good[2], good[2], short], dtype=object)
+    want = V.seq_dot_udf.func(pd.Series([good[0]]), pd.Series([good[2]]))
+    got = V.seq_dot_udf.func(a, b)
+    assert got.isna().tolist() == [False, True, True, True]
+    assert got[0] == want[0]
+    for f in (V.cos_seq_udf.func, V.d2_seq_udf.func):
+        assert f(a, b).isna().tolist() == [False, True, True, True]
+    # the signature of such a row is 0, as the SQL CASE WHEN form gives
+    sig = V.make_sig_udf(_DUP_SIGNS).func(a)
+    sn = V.make_sig_norm_udf(_DUP_SIGNS).func(a)
+    assert sig[0] != 0 and sig[1:3].tolist() == [0, 0]
+    assert sn["sig"].tolist() == sig.tolist()
+    assert sn["norm"].isna().tolist() == [False, True, True, False]
+
+
+def test_texthash_cache_shared_across_pickled_tasks():
+    """The word caches are process-level: each task unpickles its own
+    copy of the UDF function, and every copy fills the module's one
+    cache instead of a per-task dict pickled out of a closure."""
+    import pandas as pd
+    from pyspark import cloudpickle
+
+    from lgid_spark.functions import texthash as H
+
+    cases = [(H.make_minhash_udf(3, "t{k}|"), H._MINHASH_CACHE, (3, "t{k}|")),
+             (H.make_simhash_udf(16, 4), H._SIMHASH_CACHE, (16, 4))]
+    for udf, store, key in cases:
+        f1, f2 = (cloudpickle.loads(cloudpickle.dumps(udf.func))
+                  for _ in range(2))
+        store.pop(key, None)
+        f1(pd.Series([["alpha", "beta"]]))
+        cache = store[key]
+        assert set(cache) == {"alpha", "beta"}
+        f2(pd.Series([["gamma"]]))
+        assert store[key] is cache and set(cache) == {"alpha", "beta",
+                                                      "gamma"}
