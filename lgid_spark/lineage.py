@@ -290,16 +290,16 @@ def resume_frames(
         # Trust is opt-in (run_filter sets it for table:/bucketed:
         # inputs only): a plain parquet input that merely HAPPENS to
         # carry a url_canon column — foreign, or written before a
-        # canonical_url change — must be re-canonicalized
+        # canonical_url change — is dropped here, so exact_dedup_pages
+        # re-canonicalizes it and repartitions by bucket
         trusted = trust_url_canon and "url_canon" in web_pages.columns
         needed = ["url", "warc_ts", "html", "lang"] + (
             ["text"] if near_dup else []) + (
             ["url_canon"] if trusted else [])
         pages = web_pages.select(
             *[c for c in needed if c in web_pages.columns])
-        if not trusted:
-            pages = pages.withColumn("url_canon", canonical_url(F.col("url")))
-        key = bucket_id(F.col("url_canon"), n_buckets)
+        key = bucket_id(F.col("url_canon") if trusted
+                        else canonical_url(F.col("url")), n_buckets)
         extra_cols = ("dup_count",)
     else:
         pages = with_bucket(web_pages, n_buckets)

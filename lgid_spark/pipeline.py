@@ -4,9 +4,9 @@ Stages of the crawl filter job (lineage.run_incremental composes them):
 
   web_pages ──▶ resume filter: drop rows whose bucket is committed
                 (lineage.py; before any shuffle)
-            ──▶ exact dedup: one map-side-combinable min(struct)
-                aggregate on the canonical url — the job's one exchange
-                (none over a table bucketed by url_canon)
+            ──▶ exact dedup: repartition by the canonical url's bucket —
+                the job's one exchange (none over a table bucketed by
+                url_canon) — then one min(struct) per canonical url
             ──▶ optional near-dup losers (MinHash → Jaccard →
                 connected components), anti-joined out
             ──▶ fused Arrow pandas UDF: extract → langid + perplexity →
@@ -317,31 +317,38 @@ def exact_dedup_pages(
     * dup_count = how many input spellings/copies collapsed into the
       winner (lineage: dedup_dropped = Σ(dup_count − 1)).
 
-    Scale shape: ONE shuffle on the canonical key with map-side
-    combine (min/count partial aggregation) — the same shape as the
-    line-dedup fix; no window, no row_number, no skew pile-up.
+    Scale shape: ONE shuffle, ``repartition("bucket")``, then a
+    (bucket, url_canon) min/count aggregate that the exchange already
+    satisfies — no window, no row_number. Every task downstream holds
+    whole buckets, so the partitionBy("bucket") sink writes one file
+    per bucket instead of one per (task, bucket). Rows cross the
+    exchange before they collapse: a url with many copies is no longer
+    pre-reduced map-side, but all its copies land in one bucket, and so
+    in one task, either way.
 
     If the input already carries ``url_canon`` (a table written by
     write_bucketed_pages / attached by register_bucketed_pages), the
-    column is trusted instead of recomputed and the aggregate groups
-    on it directly — over a catalog-bucketed scan Spark then runs the
-    dedup with ZERO Exchange (the steady-state 100-TB shape; the
-    shuffle was paid once at table-write time).
+    column is trusted instead of recomputed and no repartition is
+    added — over a catalog-bucketed scan the url_canon layout already
+    satisfies the (bucket, url_canon) grouping, so Spark runs the dedup
+    with ZERO Exchange (the steady-state 100-TB shape; the shuffle was
+    paid once at table-write time).
     """
     pre_canonical = "url_canon" in pages.columns
     cols = [c for c in pages.columns if c != "url_canon"]
     rest = [c for c in cols if c not in ("warc_ts", "url")]
     canon = (pages if pre_canonical else
              pages.withColumn("url_canon", canonical_url(F.col("url"))))
-    # group on url_canon ALONE: bucket is a pure function of it, and
-    # keeping derived columns out of the grouping key lets a bucketed
-    # scan's layout satisfy the aggregate's distribution requirement
-    grouped = canon.groupBy("url_canon").agg(
+    canon = canon.withColumn(
+        "bucket", bucket_id(F.col("url_canon"), n_buckets))
+    if not pre_canonical:
+        canon = canon.repartition("bucket")
+    grouped = canon.groupBy("bucket", "url_canon").agg(
         F.min(F.struct("warc_ts", "url", *rest)).alias("_w"),
         F.count("*").alias("dup_count"),
     )
     return grouped.select(
-        bucket_id(F.col("url_canon"), n_buckets).alias("bucket"),
+        "bucket",
         *[F.col(f"_w.{c}").alias(c) for c in cols],
         "dup_count",
     )

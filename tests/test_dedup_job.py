@@ -106,6 +106,48 @@ def test_resume_filter_keeps_bucketed_input_exchange_free(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
+def test_untrusted_dedup_exchange_is_keyed_by_bucket(spark):
+    """On an untrusted input (here one carrying a url_canon column it
+    must not trust) the resumed labelled plan has ONE Exchange: the
+    dedup's hashpartitioning on the bucket, below the partial
+    aggregate. No exchange is keyed on url_canon."""
+    from lgid_spark.lineage import resume_frames
+
+    pages = spark_web_pages_with_dups(spark, N).withColumn(
+        "url_canon", F.lit("bogus"))
+    todo = resume_frames(spark, pages, [0, 1, 2], N_BUCKETS)
+    plan = todo.labelled._jdf.queryExecution().executedPlan().toString()
+    exchanges = re.findall(r"Exchange (\w+\([^)]*\))", plan)
+    assert len(exchanges) == 1, plan
+    assert re.match(r"hashpartitioning\(bucket#\d+, ", exchanges[0]), plan
+    assert "url_canon" not in exchanges[0]
+    assert plan.index("partial_min") < plan.index("Exchange")
+
+
+def test_dedup_sink_writes_one_file_per_bucket(spark, tmp_path):
+    """Each post-dedup task holds whole buckets, so a run writes ONE
+    parquet file into every bucket= directory: on a fresh run over half
+    the buckets, and again on the resume that processes the rest."""
+    from lgid_spark.pipeline import bucket_id, canonical_url
+
+    out, metrics = tmp_path / "out", str(tmp_path / "metrics")
+
+    def files_per_bucket():
+        return {d.name: len(list(d.glob("*.parquet")))
+                for d in out.iterdir() if d.name.startswith("bucket=")}
+
+    pages = spark_web_pages_with_dups(spark, N)
+    half = pages.where(
+        bucket_id(canonical_url(F.col("url")), N_BUCKETS) < N_BUCKETS // 2)
+    run_incremental(spark, half, str(out), metrics, "snap1", N_BUCKETS)
+    assert files_per_bucket() == {
+        f"bucket={b}": 1 for b in range(N_BUCKETS // 2)}
+    r = run_incremental(spark, pages, str(out), metrics, "snap2", N_BUCKETS)
+    assert r["processed_buckets"] == N_BUCKETS // 2
+    assert files_per_bucket() == {
+        f"bucket={b}": 1 for b in range(N_BUCKETS)}
+
+
 def test_run_incremental_dedup_lineage(spark, tmp_path):
     out, metrics = str(tmp_path / "out"), str(tmp_path / "metrics")
     pages = spark_web_pages_with_dups(spark, N)
