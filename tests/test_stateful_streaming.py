@@ -4,12 +4,35 @@ incrementally from a file stream."""
 from __future__ import annotations
 
 import datetime as dt
+import time
 
 from lgid_spark.streaming.stateful import sessionize_stream
 
 
 def _events(spark, rows):
     return spark.createDataFrame(rows, "user_id bigint, ts timestamp")
+
+
+def _drain(q, timeout_sec=120):
+    """Wait for the availableNow run's data batch, then stop the query.
+
+    A ProcessingTimeTimeout state operator always asks for another
+    (no-data) batch, so an availableNow run of sessionize_stream never
+    terminates on its own: awaitTermination would sit out its whole
+    timeout and leave the query running for the rest of the session,
+    and processAllAvailable would never return. The input is a few
+    files with no maxFilesPerTrigger, so it is all read in one batch;
+    its progress is posted after the sink commit."""
+    deadline = time.monotonic() + timeout_sec
+    try:
+        while not any(p["numInputRows"] for p in q.recentProgress):
+            if q.exception() is not None:
+                raise q.exception()
+            assert time.monotonic() < deadline, (
+                f"no data batch within {timeout_sec}s")
+            time.sleep(0.2)
+    finally:
+        q.stop()
 
 
 def test_stream_sessionize_gap_split(spark, tmp_path):
@@ -34,7 +57,7 @@ def test_stream_sessionize_gap_split(spark, tmp_path):
         out.writeStream.format("memory").queryName("sessions")
         .outputMode("append").trigger(availableNow=True).start()
     )
-    q.awaitTermination(120)
+    _drain(q)
     got = {
         (r.user_id, r.n_events, r.closed_by)
         for r in spark.sql("select * from sessions").collect()
@@ -66,7 +89,7 @@ def test_null_timestamps_do_not_fabricate_sessions(spark, tmp_path):
         .writeStream.format("memory").queryName("sessions_null")
         .outputMode("append").trigger(availableNow=True).start()
     )
-    q.awaitTermination(120)
+    _drain(q)
     got = [(r.n_events, r.session_start, r.closed_by)
            for r in spark.sql("select * from sessions_null").collect()]
     # exactly the one gap-closed session of the 3 real events; its
