@@ -4,9 +4,9 @@ Stages of the crawl filter job (lineage.run_incremental composes them):
 
   web_pages ──▶ resume filter: drop rows whose bucket is committed
                 (lineage.py; before any shuffle)
-            ──▶ exact dedup: repartition by the canonical url's bucket —
-                the job's one exchange (none over a table bucketed by
-                url_canon) — then one min(struct) per canonical url
+            ──▶ exact dedup: one map-side-combinable min(struct)
+                aggregate on the canonical url — the one exchange
+                before the UDF (none over a table bucketed by url_canon)
             ──▶ optional near-dup losers (MinHash → Jaccard →
                 connected components), anti-joined out
             ──▶ fused Arrow pandas UDF: extract → langid + perplexity →
@@ -14,11 +14,15 @@ Stages of the crawl filter job (lineage.run_incremental composes them):
                 byte-identical to the oracle
             ──▶ drop_reasons / keep (SQL array assembly)
             ──▶ optional host blocklist (broadcast dimension join)
+            ──▶ sink: rebalance by bucket, then partitionBy("bucket")
+                (lineage.run_incremental) — one file per bucket a run
 
 Design notes for 100 TB:
-  * Everything after the dedup exchange is a narrow map, so it scales
-    linearly with executors; the lineage groupBy (lineage.py) is on the
-    low-cardinality bucket key.
+  * Everything between the dedup exchange and the sink's rebalance is
+    a narrow map over the url-hash partitions, so the UDF pass scales
+    linearly with executors (it is never capped at the bucket count);
+    the lineage groupBy (lineage.py) is on the low-cardinality bucket
+    key.
   * Model weights (~5 MB float32) ship once per executor via
     SparkContext.broadcast, not per task.
   * The fused UDF tokenizes once and shares the tokens between langid
@@ -317,38 +321,31 @@ def exact_dedup_pages(
     * dup_count = how many input spellings/copies collapsed into the
       winner (lineage: dedup_dropped = Σ(dup_count − 1)).
 
-    Scale shape: ONE shuffle, ``repartition("bucket")``, then a
-    (bucket, url_canon) min/count aggregate that the exchange already
-    satisfies — no window, no row_number. Every task downstream holds
-    whole buckets, so the partitionBy("bucket") sink writes one file
-    per bucket instead of one per (task, bucket). Rows cross the
-    exchange before they collapse: a url with many copies is no longer
-    pre-reduced map-side, but all its copies land in one bucket, and so
-    in one task, either way.
+    Scale shape: ONE shuffle on the canonical key with map-side
+    combine (min/count partial aggregation) — the same shape as the
+    line-dedup fix; no window, no row_number, no skew pile-up.
 
     If the input already carries ``url_canon`` (a table written by
     write_bucketed_pages / attached by register_bucketed_pages), the
-    column is trusted instead of recomputed and no repartition is
-    added — over a catalog-bucketed scan the url_canon layout already
-    satisfies the (bucket, url_canon) grouping, so Spark runs the dedup
-    with ZERO Exchange (the steady-state 100-TB shape; the shuffle was
-    paid once at table-write time).
+    column is trusted instead of recomputed and the aggregate groups
+    on it directly — over a catalog-bucketed scan Spark then runs the
+    dedup with ZERO Exchange (the steady-state 100-TB shape; the
+    shuffle was paid once at table-write time).
     """
     pre_canonical = "url_canon" in pages.columns
     cols = [c for c in pages.columns if c != "url_canon"]
     rest = [c for c in cols if c not in ("warc_ts", "url")]
     canon = (pages if pre_canonical else
              pages.withColumn("url_canon", canonical_url(F.col("url"))))
-    canon = canon.withColumn(
-        "bucket", bucket_id(F.col("url_canon"), n_buckets))
-    if not pre_canonical:
-        canon = canon.repartition("bucket")
-    grouped = canon.groupBy("bucket", "url_canon").agg(
+    # group on url_canon ALONE: bucket is a pure function of it, and
+    # keeping derived columns out of the grouping key lets a bucketed
+    # scan's layout satisfy the aggregate's distribution requirement
+    grouped = canon.groupBy("url_canon").agg(
         F.min(F.struct("warc_ts", "url", *rest)).alias("_w"),
         F.count("*").alias("dup_count"),
     )
     return grouped.select(
-        "bucket",
+        bucket_id(F.col("url_canon"), n_buckets).alias("bucket"),
         *[F.col(f"_w.{c}").alias(c) for c in cols],
         "dup_count",
     )

@@ -106,11 +106,13 @@ def test_resume_filter_keeps_bucketed_input_exchange_free(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
-def test_untrusted_dedup_exchange_is_keyed_by_bucket(spark):
+def test_udf_pass_runs_on_url_canon_partitions(spark):
     """On an untrusted input (here one carrying a url_canon column it
     must not trust) the resumed labelled plan has ONE Exchange: the
-    dedup's hashpartitioning on the bucket, below the partial
-    aggregate. No exchange is keyed on url_canon."""
+    dedup aggregate's hashpartitioning on url_canon, between its partial
+    and final halves. Nothing upstream of the UDF is keyed by bucket,
+    so the UDF pass spreads over every shuffle partition instead of at
+    most n_buckets of them."""
     from lgid_spark.lineage import resume_frames
 
     pages = spark_web_pages_with_dups(spark, N).withColumn(
@@ -119,33 +121,49 @@ def test_untrusted_dedup_exchange_is_keyed_by_bucket(spark):
     plan = todo.labelled._jdf.queryExecution().executedPlan().toString()
     exchanges = re.findall(r"Exchange (\w+\([^)]*\))", plan)
     assert len(exchanges) == 1, plan
-    assert re.match(r"hashpartitioning\(bucket#\d+, ", exchanges[0]), plan
-    assert "url_canon" not in exchanges[0]
-    assert plan.index("partial_min") < plan.index("Exchange")
+    assert re.match(r"hashpartitioning\(url_canon#\d+, ", exchanges[0]), plan
+    assert (plan.index("ArrowEvalPython") < plan.index("Exchange")
+            < plan.index("partial_min"))
+
+
+def _files_per_bucket(out):
+    return {d.name: len(list(d.glob("*.parquet")))
+            for d in out.iterdir() if d.name.startswith("bucket=")}
 
 
 def test_dedup_sink_writes_one_file_per_bucket(spark, tmp_path):
-    """Each post-dedup task holds whole buckets, so a run writes ONE
-    parquet file into every bucket= directory: on a fresh run over half
-    the buckets, and again on the resume that processes the rest."""
+    """The sink rebalances by bucket, so a run writes ONE parquet file
+    into every bucket= directory: on a fresh run over half the buckets,
+    and again on the resume that processes the rest."""
     from lgid_spark.pipeline import bucket_id, canonical_url
 
     out, metrics = tmp_path / "out", str(tmp_path / "metrics")
-
-    def files_per_bucket():
-        return {d.name: len(list(d.glob("*.parquet")))
-                for d in out.iterdir() if d.name.startswith("bucket=")}
-
     pages = spark_web_pages_with_dups(spark, N)
     half = pages.where(
         bucket_id(canonical_url(F.col("url")), N_BUCKETS) < N_BUCKETS // 2)
     run_incremental(spark, half, str(out), metrics, "snap1", N_BUCKETS)
-    assert files_per_bucket() == {
+    assert _files_per_bucket(out) == {
         f"bucket={b}": 1 for b in range(N_BUCKETS // 2)}
     r = run_incremental(spark, pages, str(out), metrics, "snap2", N_BUCKETS)
     assert r["processed_buckets"] == N_BUCKETS // 2
-    assert files_per_bucket() == {
+    assert _files_per_bucket(out) == {
         f"bucket={b}": 1 for b in range(N_BUCKETS)}
+
+
+@pytest.mark.parametrize("kw", [dict(dedup=False), dict(near_dup=True)],
+                         ids=["no_dedup", "near_dup"])
+def test_sink_writes_one_file_per_bucket_without_exact_dedup_layout(
+        spark, tmp_path, kw):
+    """The no-dedup and near-dup paths reach the sink in the input's or
+    the loser anti-join's partitions, each holding rows of many buckets;
+    the sink's rebalance still leaves one file per bucket."""
+    out = tmp_path / "out"
+    pages = spark_web_pages_with_dups(spark, 60).repartition(4)
+    run_incremental(spark, pages, str(out), str(tmp_path / "metrics"),
+                    "snap", N_BUCKETS, **kw)
+    buckets = spark.read.parquet(str(out)).select("bucket").distinct()
+    assert _files_per_bucket(out) == {
+        f"bucket={r.bucket}": 1 for r in buckets.collect()}
 
 
 def test_run_incremental_dedup_lineage(spark, tmp_path):

@@ -14,7 +14,8 @@ def _events(spark, rows):
 
 
 def _drain(q, timeout_sec=120):
-    """Wait for the availableNow run's data batch, then stop the query.
+    """Wait for the availableNow run's data batch and one batch after
+    it, then stop the query.
 
     A ProcessingTimeTimeout state operator always asks for another
     (no-data) batch, so an availableNow run of sessionize_stream never
@@ -22,14 +23,22 @@ def _drain(q, timeout_sec=120):
     timeout and leave the query running for the rest of the session,
     and processAllAvailable would never return. The input is a few
     files with no maxFilesPerTrigger, so it is all read in one batch;
-    its progress is posted after the sink commit."""
+    its progress is posted after the sink commit. The later batch is a
+    no-data batch that evaluates the processing-time timeouts, so a
+    session that times out too early shows up in the sink."""
     deadline = time.monotonic() + timeout_sec
+
+    def data_batch_followed():
+        ids = [p["batchId"] for p in q.recentProgress]
+        data = [p["batchId"] for p in q.recentProgress if p["numInputRows"]]
+        return bool(data) and max(ids) > data[0]
+
     try:
-        while not any(p["numInputRows"] for p in q.recentProgress):
+        while not data_batch_followed():
             if q.exception() is not None:
                 raise q.exception()
             assert time.monotonic() < deadline, (
-                f"no data batch within {timeout_sec}s")
+                f"no data batch and follow-up within {timeout_sec}s")
             time.sleep(0.2)
     finally:
         q.stop()
@@ -64,7 +73,7 @@ def test_stream_sessionize_gap_split(spark, tmp_path):
     }
     # the in-batch gap closes user 1's first session eagerly; the
     # still-open sessions (u1 second, u2) remain in state (no timeout
-    # fires within an availableNow run)
+    # fires in the data batch or the no-data batch after it)
     assert (1, 3, "gap") in got
     assert all(c == "gap" for (_, _, c) in got)
 
