@@ -98,7 +98,7 @@ def main(argv: list[str] | None = None) -> int:
         # staged dedup table they asked for
         ap.error("--near-dup-stage requires --near-dup")
 
-    from lgid_spark.session import get_submit_spark
+    from lgid_spark.session import get_submit_spark, local_frame
 
     # under spark-submit the session/master comes from the launcher
     spark = get_submit_spark("lgid_filter")
@@ -141,8 +141,7 @@ def main(argv: list[str] | None = None) -> int:
             # inline styles both occur in real UT1-style lists)
             hosts = [h for h in
                      (ln.split("#", 1)[0].strip() for ln in fh) if h]
-        blocked = spark.createDataFrame(
-            [(h,) for h in hosts], "host string")
+        blocked = local_frame(spark, [(h,) for h in hosts], "host string")
 
     snapshot = args.snapshot_id or f"snap-{int(time.time())}"
     t0 = time.time()

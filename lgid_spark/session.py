@@ -9,8 +9,10 @@ small) while remaining correct on local[N] test runs.
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Tuned for local[N] testing; on a real cluster these come from spark-submit.
 _DEFAULTS: dict[str, str] = {
@@ -95,6 +97,33 @@ def apply_engine_defaults(spark: SparkSession) -> None:
                 spark.conf.set(k, v)
             except Exception:
                 pass  # non-runtime-settable under this deployment
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[Sequence], schema: StructType | str
+) -> DataFrame:
+    """A DataFrame of driver-side rows (tuples or Rows in schema order),
+    built through Arrow: a pyarrow.Table typed by the schema and filled
+    column by column, parallelized by the JVM.
+
+    ``spark.createDataFrame(list)`` plans a PythonRDD that unpickles
+    the rows, so every task that reads it waits for a Python worker —
+    0.75-2.2 s of executor time for a one-task stage on a 4-core host,
+    the most in a session's first job — where an Arrow-built frame is
+    a ParallelCollectionRDD that the JVM reads alone (0.04-0.08 s). No pandas on the way: a None in a bigint
+    column would turn it into float64 and lose the bits above 2^53 of
+    a full-range xxhash64 checksum."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = zip(*rows) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow)
+    return spark.createDataFrame(table, schema)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, "object"]:

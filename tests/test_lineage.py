@@ -154,6 +154,69 @@ def test_one_metrics_file_per_run_written_after_output(spark, paths,
     assert writes == [out, metrics, out, metrics]
 
 
+def test_metrics_commit_runs_no_python_worker(spark, tmp_path,
+                                              monkeypatch):
+    """The metrics write reads a frame built through Arrow, not from a
+    PythonRDD (a Python worker per task): on a fresh run, a resume and
+    a near-dup run. The committed-bucket frame and the audit of missing
+    tables are built the same way."""
+    import pyspark.sql.functions as F
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from lgid_spark.lineage import audit_lineage
+    from lgid_spark.pipeline import bucket_id, canonical_url
+
+    def lineage_of(df):
+        return df._jdf.queryExecution().toRdd().toDebugString()
+
+    metrics_plans: list[str] = []
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *a, **kw):
+        if os.path.basename(path).startswith("metrics"):
+            metrics_plans.append(lineage_of(self._df))
+        return parquet(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    pages = spark_web_pages(spark, 120)
+    half = pages.where(
+        bucket_id(canonical_url(F.col("url")), N_BUCKETS) < N_BUCKETS // 2)
+    out, metrics = str(tmp_path / "out"), str(tmp_path / "metrics")
+    run_incremental(spark, half, out, metrics, "fresh", N_BUCKETS)
+    run_incremental(spark, pages, out, metrics, "resume", N_BUCKETS)
+    run_incremental(spark, pages, str(tmp_path / "nd_out"),
+                    str(tmp_path / "metrics_nd"), "nd", N_BUCKETS,
+                    near_dup=True)
+    assert len(metrics_plans) == 3
+    for plan in metrics_plans:
+        assert "PythonRDD" not in plan, plan
+    assert "PythonRDD" not in lineage_of(committed_buckets(spark, metrics))
+    assert "PythonRDD" not in lineage_of(audit_lineage(
+        spark, str(tmp_path / "none_out"), str(tmp_path / "none_met")))
+
+
+def test_local_frame_round_trip(spark):
+    """local_frame gives the schema and rows createDataFrame gives:
+    int64 extremes, NULL and non-empty maps, a NULL checksum (no
+    float64 detour), and an empty row list."""
+    from lgid_spark.lineage import METRICS_SCHEMA
+    from lgid_spark.session import local_frame
+
+    rows = [
+        (0, "s", -2**63, 2**63 - 1, 0, 0, {"too_short": 3, "bad_lang": 1},
+         2**63 - 1),
+        (1, "s", 0, 0, 2**63 - 1, -2**63, None, None),
+        (63, "s", 5, 2, 0, 1, {}, -2**63),
+    ]
+    for data in (rows, []):
+        got = local_frame(spark, data, METRICS_SCHEMA)
+        ref = spark.createDataFrame(data, METRICS_SCHEMA)
+        assert got.schema == ref.schema == METRICS_SCHEMA
+        assert got.collect() == ref.collect()
+    assert [tuple(r) for r in local_frame(
+        spark, rows, METRICS_SCHEMA).collect()] == rows
+
+
 def test_bucket_partition_pruning_on_readback(spark, tmp_path):
     """North-rule partitioning claim, verified in the plan: the filter
     output is written partitionBy(bucket), so a bucket-keyed read-back
