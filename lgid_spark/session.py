@@ -22,6 +22,29 @@ _DEFAULTS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Let AQE re-plan a persisted plan too. lineage.run_incremental
+    # persists the UDF output, and with Spark's default (false) the
+    # cached plan's final shuffle — the dedup exchange that feeds the
+    # fused UDF — is never coalesced: 2000 docs ran as 32 UDF tasks,
+    # each paying a fixed median 0.36-0.46 s ("time to initialize
+    # Python workers"), 14.5-18 executor-s in all. Coalesced it is 1
+    # task (0.9-1.3 executor-s), and a warm run_incremental on
+    # synth:2000 went 8.6-9.4 s → 4.8-5.7 s (4-core host, one window).
+    # AQE still keeps defaultParallelism partitions once the shuffle
+    # outgrows its minimum partition size: synth:20000 runs the UDF in
+    # 4 tasks on local[4] (was 32), so a UDF-bound input stays
+    # parallel.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+    # Bounds the partition directories a driver lists itself before it
+    # starts a Spark job to list them. Spark's default (32) is below the
+    # 64 bucket= dirs of the filter output, so the output append-schema
+    # guard of every re-run launched a 64-task listing job: 0.61-0.88 s
+    # in 2 jobs, against 0.16-0.19 s in 1 job listed on the driver
+    # (warm synth:2000 no-op, 4-core host, local dirs). An object-store
+    # deployment, where each listing is a remote call, should set its
+    # own value through the launcher (--conf), which
+    # apply_engine_defaults leaves alone.
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "1024",
     # Arrow for every pandas UDF / toPandas crossing. Batch size is a
     # first-order throughput lever for the fused pipeline UDF — measured
     # at 960k docs/local[32]: 2048 → 72k docs/s, 8192 → 94k, 16384 →

@@ -414,3 +414,71 @@ def test_noop_rerun_never_evaluates_html(spark, paths, kw):
     r = run_incremental(spark, poisoned, out, metrics, "snap2",
                         N_BUCKETS, **kw)
     assert r == {"processed_rows": 0, "processed_buckets": 0}
+
+
+def _run_in_group(spark, group, fn):
+    """Run ``fn`` with its Spark jobs in job group ``group``; return the
+    jobs and, per stage that ran (not skipped), its task count and
+    whether its RDD graph holds an ArrowEvalPython (the fused UDF) —
+    read from the status store, which works with the UI disabled."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    store = sc._jsc.sc().statusStore()
+    tracker = sc.statusTracker()
+
+    def scopes(cluster):
+        yield cluster.name()
+        it = cluster.childClusters().iterator()
+        while it.hasNext():
+            yield from scopes(it.next())
+
+    jobs = list(tracker.getJobIdsForGroup(group))
+    stages = {}
+    for j in jobs:
+        for sid in tracker.getJobInfo(j).stageIds:
+            info = tracker.getStageInfo(sid)
+            if info is None or info.numCompletedTasks == 0:
+                continue  # skipped: its shuffle output was reused
+            udf = "ArrowEvalPython" in scopes(
+                store.operationGraphForStage(sid).rootCluster())
+            stages[sid] = (info.numTasks, udf)
+    return jobs, stages
+
+
+def test_udf_stage_is_coalesced_by_aqe(spark, paths):
+    """run_incremental persists the UDF output; AQE must still coalesce
+    the dedup exchange inside that cached plan, so a small input runs
+    the fused UDF in fewer tasks than spark.sql.shuffle.partitions
+    (one Python-worker init per task)."""
+    out, metrics = paths
+    pages = spark_web_pages(spark, N)
+    _, stages = _run_in_group(
+        spark, "lgid_udf_stage", lambda: run_incremental(
+            spark, pages, out, metrics, "snap1", N_BUCKETS))
+    udf_tasks = [n for n, udf in stages.values() if udf]
+    assert udf_tasks, stages
+    shuffle_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert max(udf_tasks) < shuffle_partitions, stages
+
+
+def test_noop_rerun_lists_output_on_driver(spark, paths):
+    """A no-op re-run over a 64-bucket output lists the bucket dirs on
+    the driver: no stage as wide as the directory count (a parallel
+    listing job) and at most 4 Spark jobs (the two guards, the
+    committed-id read and the probe)."""
+    out, metrics = paths
+    pages = spark_web_pages(spark, N)
+    run_incremental(spark, pages, out, metrics, "snap1", 64)
+    n_dirs = sum(d.startswith("bucket=") for d in os.listdir(out))
+    assert n_dirs > 32  # above Spark's default listing threshold
+    result = {}
+    jobs, stages = _run_in_group(
+        spark, "lgid_noop", lambda: result.update(run_incremental(
+            spark, pages, out, metrics, "snap2", 64)))
+    assert result == {"processed_rows": 0, "processed_buckets": 0}
+    assert len(jobs) <= 4, (jobs, stages)
+    assert all(n < n_dirs for n, _ in stages.values()), stages

@@ -64,3 +64,28 @@ def test_spark_submit_py_files_filter_job(tmp_path):
     assert run2.returncode == 0, run2.stderr[-3000:]
     summary2 = json.loads(run2.stdout.strip().splitlines()[-1])
     assert summary2["processed_buckets"] == 0
+
+
+@pytest.mark.parametrize("key,value", [
+    ("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"),
+    ("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024"),
+])
+def test_apply_engine_defaults_fills_launcher_unset_keys(key, value):
+    """A spark-submit session gets the engine's SQL default for a key
+    the launcher left unset, and keeps the launcher's own --conf."""
+    from types import SimpleNamespace
+
+    from lgid_spark.session import apply_engine_defaults
+
+    def session(launcher: dict, runtime: dict):
+        return SimpleNamespace(
+            sparkContext=SimpleNamespace(getConf=lambda: SimpleNamespace(
+                contains=launcher.__contains__)),
+            conf=SimpleNamespace(set=runtime.__setitem__))
+
+    runtime: dict = {}
+    apply_engine_defaults(session({}, runtime))
+    assert runtime[key] == value
+    runtime = {}
+    apply_engine_defaults(session({key: "launcher"}, runtime))
+    assert key not in runtime
