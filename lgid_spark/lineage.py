@@ -12,6 +12,12 @@ metrics table:
   checksum from rows. The lineage write and the audit both call it,
   so the books are computed one way; the run collects its at most N
   lineage rows once and writes them as one metrics file.
+* Books merge: counts add, checksums bit_xor, drop histograms add.
+  ``merge_books`` is that merge, on the driver, and every place that
+  combines per-bucket books uses it: a near-dup run folds its drop
+  counts into the summary rows, and the audit folds every snapshot's
+  rows before it diffs them against the output's summary. Both sides
+  are at most N rows, so no join is planned.
 * Those rows go back to Spark through Arrow (session.local_frame), a
   JVM-side ParallelCollectionRDD: ``createDataFrame(list)`` would plan
   a PythonRDD, and the one-task metrics write would wait for a Python
@@ -40,9 +46,10 @@ needs.
 from __future__ import annotations
 
 import hashlib
+from collections.abc import Iterable, Sequence
 from typing import NamedTuple
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType, LongType, MapType, StringType, StructField, StructType)
@@ -104,31 +111,52 @@ def bucket_summary(df: DataFrame) -> DataFrame:
     )
 
 
-def lineage_rows(
-    labelled: DataFrame,
-    snapshot_id: str,
-    near_dup_counts: DataFrame | None = None,
-) -> DataFrame:
+def lineage_rows(labelled: DataFrame, snapshot_id: str) -> DataFrame:
     """One metrics row per bucket of ``labelled``: its bucket_summary
     (one exchange, on the low-cardinality bucket key) tagged with the
-    snapshot, plus ``near_dup_counts`` — the optional (bucket,
-    near_dup_dropped, loser_dedup_dropped) frame of the near-dup stage,
-    joined by broadcast."""
-    out = bucket_summary(labelled)
-    nd = F.lit(0).cast("long")
-    if near_dup_counts is not None:
-        out = out.join(F.broadcast(near_dup_counts), "bucket", "left")
-        nd = F.coalesce(F.col("near_dup_dropped"), F.lit(0)).cast("long")
-        # dedup drops that left the labelled frame with the losers
-        out = out.withColumn(
-            "dedup_dropped",
-            F.col("dedup_dropped")
-            + F.coalesce(F.col("loser_dedup_dropped"), F.lit(0)))
-    return out.select(
+    snapshot. ``near_dup_dropped`` is 0 here; a near-dup run merges its
+    drop counts in on the driver (merge_books)."""
+    return bucket_summary(labelled).select(
         "bucket", F.lit(snapshot_id).alias("snapshot_id"), "input_count",
-        "kept_count", "dedup_dropped", nd.alias("near_dup_dropped"),
+        "kept_count", "dedup_dropped",
+        F.lit(0).cast("long").alias("near_dup_dropped"),
         "drop_hist", "checksum",
     )
+
+
+def merge_books(
+    rows: Iterable[tuple], snapshot_id: str | None = None
+) -> dict[int, tuple]:
+    """Merge per-bucket books (tuples or Rows in METRICS_SCHEMA order)
+    into one METRICS_SCHEMA tuple per bucket, tagged with
+    ``snapshot_id``: the four counts add, the non-NULL checksums
+    bit_xor (NULL if there are none) and the drop_hist maps add (NULL
+    if empty). This is the merge of the metrics table's own states —
+    what summing a bucket's snapshots means — so a bucket's books are
+    the same however its rows were split across snapshots or sources.
+    Python's ^ on two signed 64-bit ints is again a signed 64-bit int,
+    equal to Spark's bit_xor on longs."""
+    books: dict[int, list] = {}
+    for bucket, _, *counts, hist, checksum in rows:
+        b = books.setdefault(bucket, [0, 0, 0, 0, {}, None])
+        for i, n in enumerate(counts):
+            b[i] += n
+        for reason, n in (hist or {}).items():
+            b[4][reason] = b[4].get(reason, 0) + n
+        if checksum is not None:
+            b[5] = checksum if b[5] is None else b[5] ^ checksum
+    return {bucket: (bucket, snapshot_id, *counts, hist or None, checksum)
+            for bucket, (*counts, hist, checksum) in books.items()}
+
+
+# the columns of the output that its books read, with their types: the
+# audit reads the output with this schema instead of inferring it from
+# the footers
+OUTPUT_BOOKS_SCHEMA = ("bucket int, url string, keep boolean, "
+                       "drop_reasons array<string>, scrubbed_text string")
+AUDIT_SCHEMA = ("bucket int, lineage_rows long, lineage_kept long, "
+                "lineage_checksum long, output_rows long, output_kept long, "
+                "output_checksum long")
 
 
 def audit_lineage(
@@ -139,57 +167,38 @@ def audit_lineage(
     the lineage — diffed against the committed lineage per bucket (row
     count, kept count, order-insensitive checksum). Returns one row per
     disagreeing bucket (empty frame = books are sound) with both sides
-    of every number — the operator-facing check that a crash/retry or a
-    concurrent writer didn't leave the output and the metrics table
-    telling different stories.
+    of every number, NULL on a side that has no such bucket — the
+    operator-facing check that a crash/retry or a concurrent writer
+    didn't leave the output and the metrics table telling different
+    stories.
 
-    Lineage side: a bucket has exactly one full row (resume processes
-    only uncommitted buckets) plus possibly counts-only rows
-    (zero-count rows for emptied buckets; near-dup drop carriers for
-    committed canon buckets) — summing counts and bit_xor-ing the
-    non-null checksums per bucket collapses them correctly. Output
-    side: the summary's unused aggregates are pruned, so the scan
-    reads only (bucket, url, keep, scrubbed_text); a labels-only
-    output has a NULL checksum and is audited on counts. A path that
-    was never created (a run whose rows all vanished before the write)
-    counts as an empty table, so a missing output with committed
+    Both sides are at most N rows, so they are collected and compared
+    on the driver. Lineage side: every snapshot's rows merged per
+    bucket (merge_books), which also folds in the counts-only rows a
+    near-dup run commits. Output side: one bucket_summary of the
+    output read with OUTPUT_BOOKS_SCHEMA, its unused aggregates pruned.
+    A path that was never created (a run whose rows all vanished
+    before the write) has no books, so a missing output with committed
     lineage reports every lineage bucket — and nothing-vs-nothing is
     sound."""
-    if not _path_exists(spark, metrics_path):
-        lin_src = local_frame(spark, [], METRICS_SCHEMA)
-    else:
-        lin_src = spark.read.schema(METRICS_SCHEMA).parquet(metrics_path)
-    lin = (
-        lin_src
-        .groupBy("bucket").agg(
-            F.sum("input_count").alias("lineage_rows"),
-            F.sum("kept_count").alias("lineage_kept"),
-            F.expr("bit_xor(checksum)").alias("lineage_checksum"),
-        )
-    )
-    if not _path_exists(spark, output_path):
-        out = local_frame(
-            spark, [], "bucket int, url string, keep boolean, "
-                       "drop_reasons array<string>, scrubbed_text string")
-    else:
-        out = spark.read.parquet(output_path)
-    got = bucket_summary(out).select(
-        "bucket",
-        F.col("input_count").alias("output_rows"),
-        F.col("kept_count").alias("output_kept"),
-        F.col("checksum").alias("output_checksum"),
-    )
-    joined = lin.join(got, "bucket", "full_outer")
-    zero = lambda c: F.coalesce(F.col(c), F.lit(0))  # noqa: E731
-    return joined.where(
-        (zero("lineage_rows") != zero("output_rows"))
-        | (zero("lineage_kept") != zero("output_kept"))
-        | (
-            F.col("lineage_checksum").isNotNull()
-            & F.col("output_checksum").isNotNull()
-            & (F.col("lineage_checksum") != F.col("output_checksum"))
-        )
-    )
+    lin = {bucket: (b[2], b[3], b[7]) for bucket, b in merge_books(
+        read_metrics(spark, metrics_path)).items()}
+    out = {}
+    if _path_exists(spark, output_path):
+        out = {r.bucket: (r.input_count, r.kept_count, r.checksum)
+               for r in bucket_summary(
+                   spark.read.schema(OUTPUT_BOOKS_SCHEMA).parquet(output_path)
+               ).select("bucket", "input_count", "kept_count", "checksum")
+               .collect()}
+    none = (None, None, None)
+    bad = []
+    for bucket in sorted(lin.keys() | out.keys()):
+        l_rows, l_kept, l_sum = lin.get(bucket, none)
+        o_rows, o_kept, o_sum = out.get(bucket, none)
+        if ((l_rows or 0, l_kept or 0) != (o_rows or 0, o_kept or 0)
+                or (None not in (l_sum, o_sum) and l_sum != o_sum)):
+            bad.append((bucket, l_rows, l_kept, l_sum, o_rows, o_kept, o_sum))
+    return local_frame(spark, bad, AUDIT_SCHEMA)
 
 
 def _path_exists(spark: SparkSession, path: str) -> bool:
@@ -236,16 +245,25 @@ def _check_append_schema(
             % (output_path, sorted(existing), sorted(new_cols)))
 
 
-def committed_bucket_ids(spark: SparkSession, metrics_path: str) -> list[int]:
-    """Buckets already recorded in the metrics table, as a sorted
-    driver-side list (empty if the table doesn't exist yet). The table
-    holds at most snapshots × N rows, so they are deduplicated here:
-    one scan job with the schema given — no inference, no shuffle."""
+def read_metrics(
+    spark: SparkSession, metrics_path: str,
+    cols: Sequence[str] = METRICS_SCHEMA.names,
+) -> list[Row]:
+    """The ``cols`` of every row of the metrics table, collected (at
+    most snapshots × N rows; none if the table doesn't exist yet): one
+    scan job with the schema given — no inference, no shuffle."""
     if not _path_exists(spark, metrics_path):
         return []
-    rows = (spark.read.schema(METRICS_SCHEMA).parquet(metrics_path)
-            .select("bucket").collect())
-    return sorted({r.bucket for r in rows})
+    return (spark.read.schema(METRICS_SCHEMA).parquet(metrics_path)
+            .select(*cols).collect())
+
+
+def committed_bucket_ids(spark: SparkSession, metrics_path: str) -> list[int]:
+    """Buckets already recorded in the metrics table, as a sorted
+    driver-side list, deduplicated here (read_metrics of the bucket
+    column)."""
+    return sorted({r.bucket for r in read_metrics(
+        spark, metrics_path, ["bucket"])})
 
 
 def committed_buckets(spark: SparkSession, metrics_path: str) -> DataFrame:
@@ -259,7 +277,9 @@ class Todo(NamedTuple):
     """What a resumed run has left to do (see resume_frames)."""
 
     labelled: DataFrame                 # rows to write: uncommitted buckets
-    near_dup_counts: DataFrame | None   # (bucket, near_dup_dropped, ...)
+    # near-dup: (bucket, near_dup_dropped, loser_dedup_dropped) per
+    # canonical doc's bucket, committed or not; merged into the books
+    near_dup_counts: DataFrame | None
     fresh_buckets: DataFrame | None     # near-dup: uncommitted input buckets
     cached: DataFrame | None            # persisted near-dup input
 
@@ -387,13 +407,6 @@ def resume_frames(
     return Todo(labelled, nd_counts, fresh_buckets, cached)
 
 
-def _counts_only(bucket: int, snapshot_id: str, dedup_dropped: int = 0,
-                 near_dup_dropped: int = 0) -> tuple:
-    """A lineage row that carries drop counts but no output rows."""
-    return (bucket, snapshot_id, 0, 0, dedup_dropped, near_dup_dropped,
-            None, None)
-
-
 def run_incremental(
     spark: SparkSession,
     web_pages: DataFrame,
@@ -420,11 +433,13 @@ def run_incremental(
     most N) are collected once; the output is written first, one file
     per bucket (rebalanced by bucket before partitionBy), then the
     rows as one metrics file, built through Arrow (session.local_frame)
-    so the commit runs no Python worker. Crash between the output write
-    and the metrics write re-processes the affected buckets on retry;
-    downstream readers must key on the metrics table
-    (standard write-ahead-commit pattern — with real Iceberg both
-    writes share one transaction).
+    so the commit runs no Python worker. A crash between the output
+    write and the metrics write leaves those buckets uncommitted: the
+    retry processes them again and APPENDS their rows a second time,
+    and audit_lineage reports each such bucket (output rows twice the
+    lineage rows). Downstream readers must key on the metrics table
+    (write-ahead commit; with real Iceberg both writes share one
+    transaction).
 
     Dedup runs BEFORE the expensive Arrow UDF pass (round 4):
 
@@ -469,8 +484,7 @@ def run_incremental(
     # expensive UDF pass
     labelled = todo.labelled.persist()
     try:
-        nd_counts = todo.near_dup_counts
-        rows = lineage_rows(labelled, snapshot_id, nd_counts).collect()
+        rows = lineage_rows(labelled, snapshot_id).collect()
         n_rows = sum(r.input_count for r in rows)
         # write-ahead: the output lands before the metrics that commit it.
         # Rebalance by bucket first: a UDF task holds rows of every
@@ -488,31 +502,24 @@ def run_incremental(
                 .parquet(output_path)
             )
         if near_dup:
-            # near_dup can leave no rows while uncommitted buckets remain
-            # (every doc of every uncommitted bucket lost to a
-            # committed-bucket canonical), and a bucket whose EVERY doc
-            # was a near-dup loser has no surviving rows and thus no
-            # lineage row — commit a zero-count row for it or resume
-            # would redo the whole near-dup chain forever just to
-            # rediscover the empty bucket
-            seen = {r.bucket for r in rows}
-            rows += [_counts_only(b, snapshot_id)
-                     for (b,) in todo.fresh_buckets.collect()
-                     if b not in seen]
-            # ADVICE r4: on a resume over an EXTENDED input, a new doc
-            # can lose to a canonical doc whose bucket is already
-            # committed — lineage_rows builds rows from uncommitted
-            # buckets only, so that loser's drop would vanish and the
-            # books (input = processed + dedup_dropped +
-            # near_dup_dropped) silently break. Append a counts-only
-            # lineage row per committed canon bucket carrying its
-            # near-dup drops (and the exact-dedup drops that left with
-            # the losers).
-            rows += [_counts_only(r.bucket, snapshot_id,
-                                  r.loser_dedup_dropped or 0,
-                                  r.near_dup_dropped)
-                     for r in nd_counts.where(
-                         F.col("bucket").isin(done)).collect()]
+            # the near-dup books merge into the summary rows as
+            # counts-only rows of two kinds:
+            # * the drops of each canonical doc's bucket, together with
+            #   the exact-dedup drops that left with its losers. The
+            #   bucket may be committed (on a resume over an EXTENDED
+            #   input a new doc can lose to a committed canonical
+            #   doc), and then this row alone books the drop;
+            # * a zero row per uncommitted input bucket: a bucket whose
+            #   EVERY doc lost has no surviving row, and without a row
+            #   resume would redo the whole near-dup chain forever just
+            #   to rediscover the empty bucket
+            rows = list(merge_books(rows + [
+                (r.bucket, None, 0, 0, r.loser_dedup_dropped,
+                 r.near_dup_dropped, None, None)
+                for r in todo.near_dup_counts.collect()] + [
+                (b, None, 0, 0, 0, 0, None, None)
+                for (b,) in todo.fresh_buckets.collect()],
+                snapshot_id).values())
         if rows:  # none for an empty input on a fresh run
             (
                 local_frame(spark, rows, METRICS_SCHEMA).coalesce(1)

@@ -118,6 +118,52 @@ def test_drop_hist_null_without_drops(spark):
                    1: (3, 1, {"bad_lang": 1, "too_short": 2})}
 
 
+def test_merge_books_equals_spark_aggregate(spark):
+    """merge_books is the driver-side twin of a groupBy("bucket") over
+    the same metrics rows: counts sum, checksums bit_xor as signed
+    longs (full-range and NULL; all-NULL stays NULL) and drop_hist maps
+    add (NULL, empty and overlapping maps; NULL when no reason is
+    left). The merge is order-insensitive and tags the snapshot."""
+    import pyspark.sql.functions as F
+
+    from lgid_spark.lineage import METRICS_SCHEMA, merge_books
+    from lgid_spark.session import local_frame
+
+    lo, hi = -2**63, 2**63 - 1
+    rows = [
+        (0, "a", 3, 1, 2, 0, {"too_short": 2}, hi),
+        (0, "b", 4, 2, 0, 1, {"too_short": 1, "bad_lang": 1}, lo),
+        (0, "c", 0, 0, 1, 5, None, None),
+        (1, "a", 2, 2, 0, 0, None, lo),
+        (1, "b", 0, 0, 0, 3, {}, None),
+        (1, "c", 1, 0, 0, 0, {}, lo),
+        (2, "a", 0, 0, 4, 2, {}, None),
+        (3, "a", 5, 5, 0, 0, None, 0x5DEECE66D),
+        (3, "b", 1, 0, 0, 0, {"bad_lang": 1}, -1),
+        (3, "c", 2, 1, 1, 1, {"bad_lang": 2, "too_short": 1}, hi),
+    ]
+    counts = METRICS_SCHEMA.names[2:6]
+    df = local_frame(spark, rows, METRICS_SCHEMA)
+    want = {r["bucket"]: tuple(r)[1:] for r in df.groupBy("bucket").agg(
+        *[F.sum(c) for c in counts],
+        F.expr("bit_xor(checksum)")).collect()}
+    hists: dict[int, dict[str, int]] = {}
+    for r in (df.select("bucket", F.explode("drop_hist"))
+              .groupBy("bucket", "key").agg(F.sum("value")).collect()):
+        hists.setdefault(r[0], {})[r[1]] = r[2]
+
+    got = merge_books(rows, "merged")
+    assert set(got) == set(want) == {0, 1, 2, 3}
+    for b, (bucket, snap, *n, hist, checksum) in got.items():
+        assert (bucket, snap) == (b, "merged")
+        assert (*n, checksum) == want[b]
+        assert hist == hists.get(b)
+    assert (got[0][7], got[1][7], got[2][7]) == (-1, 0, None)  # hi ^ lo
+    assert got[1][6] is None and got[2][6] is None  # NULL and empty maps
+    assert merge_books(reversed(rows), "merged") == got
+    assert merge_books(got.values()) == merge_books(rows)
+
+
 def test_one_metrics_file_per_run_written_after_output(spark, paths,
                                                        monkeypatch):
     """A run collects its lineage rows once and appends them as ONE
@@ -305,17 +351,102 @@ def test_audit_lineage_sound_and_detects_divergence(spark, paths, tmp_path):
     # bucket): counts still reconcile row-wise but kept/checksum don't
     out2, metrics2 = str(tmp_path / "out2"), str(tmp_path / "m2")
     run_incremental(spark, pages, out2, metrics2, "snap1", N_BUCKETS)
-    df = spark.read.parquet(out2)
-    b0 = df.first()["bucket"]
-    rewrite = df.where(F.col("bucket") == b0).withColumn(
-        "keep", ~F.col("keep")).drop("bucket").persist()
-    rewrite.count()
-    shutil.rmtree(f"{out2}/bucket={b0}")
-    rewrite.write.parquet(f"{out2}/bucket={b0}")
+
+    def rewrite(bucket, col, value):
+        df = spark.read.parquet(out2).where(F.col("bucket") == bucket)
+        new = df.withColumn(col, value).drop("bucket").persist()
+        new.count()
+        shutil.rmtree(f"{out2}/bucket={bucket}")
+        new.write.parquet(f"{out2}/bucket={bucket}")
+        new.unpersist()
+
+    b0 = spark.read.parquet(out2).first()["bucket"]
+    rewrite(b0, "keep", ~F.col("keep"))
     bad2 = audit_lineage(spark, out2, metrics2).collect()
     assert [r["bucket"] for r in bad2] == [b0]
     assert bad2[0]["lineage_rows"] == bad2[0]["output_rows"]
     assert bad2[0]["lineage_kept"] != bad2[0]["output_kept"]
+
+    # tamper with the TEXT only (append to every scrubbed_text of one
+    # bucket): rows and kept reconcile, only the checksums disagree
+    b1 = spark.read.parquet(out2).where(
+        (F.col("bucket") != b0) & F.col("keep")).first()["bucket"]
+    rewrite(b1, "scrubbed_text", F.concat("scrubbed_text", F.lit("x")))
+    bad3 = {r["bucket"]: r for r in audit_lineage(
+        spark, out2, metrics2).collect()}
+    assert sorted(bad3) == sorted([b0, b1])
+    r = bad3[b1]
+    assert r["lineage_rows"] == r["output_rows"]
+    assert r["lineage_kept"] == r["output_kept"]
+    assert None not in (r["lineage_checksum"], r["output_checksum"])
+    assert r["lineage_checksum"] != r["output_checksum"]
+
+
+def test_crash_between_output_and_metrics_write(spark, paths,
+                                                monkeypatch):
+    """Fault injection in the commit's crash window: the output write
+    lands and the run dies before the metrics write. The retry finds
+    nothing committed, processes every bucket again and APPENDS its
+    rows a second time, and the audit names every re-appended bucket
+    with twice its lineage rows in the output. Writing the todo
+    buckets with dynamic partition overwrite (ROADMAP item 4) turns
+    this expectation into an empty audit."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from lgid_spark.lineage import audit_lineage
+
+    out, metrics = paths
+    parquet = DataFrameWriter.parquet
+
+    def crash_at_commit(self, path, *a, **kw):
+        if path == metrics:
+            raise RuntimeError("crash before the metrics write")
+        return parquet(self, path, *a, **kw)
+
+    pages = spark_web_pages(spark, 120)
+    monkeypatch.setattr(DataFrameWriter, "parquet", crash_at_commit)
+    with pytest.raises(RuntimeError, match="crash before"):
+        run_incremental(spark, pages, out, metrics, "crashed", N_BUCKETS)
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    assert not os.path.exists(metrics)
+    first = spark.read.parquet(out).count()
+    assert first == 120
+
+    r = run_incremental(spark, pages, out, metrics, "retry", N_BUCKETS)
+    assert r == {"processed_rows": 120, "processed_buckets": N_BUCKETS}
+    assert spark.read.parquet(out).count() == 2 * first
+    bad = audit_lineage(spark, out, metrics).collect()
+    assert len(bad) == N_BUCKETS
+    for row in bad:
+        assert row["output_rows"] == 2 * row["lineage_rows"] > 0
+        assert row["output_kept"] == 2 * row["lineage_kept"]
+
+
+def test_audit_runs_no_join(spark, paths, monkeypatch):
+    """The audit collects both sides' per-bucket books and diffs them
+    on the driver: no query it runs plans a Join, and the frame it
+    returns is built through Arrow."""
+    from lgid_spark.lineage import audit_lineage
+
+    out, metrics = paths
+    run_incremental(spark, spark_web_pages(spark, 120), out, metrics,
+                    "snap1", N_BUCKETS)
+    DataFrame = type(spark.range(1))  # the concrete (classic) class
+    plans: list[str] = []
+    collect = DataFrame.collect
+
+    def spy(self):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return collect(self)
+
+    monkeypatch.setattr(DataFrame, "collect", spy)
+    audit = audit_lineage(spark, out, metrics)
+    monkeypatch.setattr(DataFrame, "collect", collect)
+    assert audit.count() == 0
+    assert len(plans) == 2, plans  # the metrics rows, the output books
+    for plan in plans + [
+            audit._jdf.queryExecution().executedPlan().toString()]:
+        assert "Join" not in plan, plan
 
 
 def _books(spark, metrics):
