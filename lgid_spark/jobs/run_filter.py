@@ -22,8 +22,11 @@ Resumable: re-running with the same metrics path processes only buckets
 not yet committed (lineage.run_incremental). The committed bucket ids
 are read once and the input rows of those buckets are filtered out
 before the dedup exchange and the UDF pass; one probe decides the
-no-op, so re-running a finished job does no dedup or UDF work. Prints
-one JSON summary line to stdout.
+no-op, so re-running a finished job does no dedup or UDF work. A run
+rewrites the output dirs of the buckets it owns (the uncommitted
+ones) and books the lineage from the files it wrote, so a retry after
+a crash at any point before the metrics write leaves each bucket's
+rows in the output once. Prints one JSON summary line to stdout.
 """
 
 from __future__ import annotations

@@ -9,9 +9,18 @@ metrics table:
 
 * One per-bucket summary (``bucket_summary``: a single groupBy on the
   bucket) computes the counts, the drop-reason histogram and the
-  checksum from rows. The lineage write and the audit both call it,
-  so the books are computed one way; the run collects its at most N
-  lineage rows once and writes them as one metrics file.
+  checksum from rows. The commit and the audit both run it over the
+  output FILES, read by one reader (read_output), so there is one
+  source of books; the run collects its at most N lineage rows once
+  and writes them as one metrics file.
+* Write-ahead commit over owned buckets: a run owns every bucket not
+  yet in the metrics table. It deletes their ``bucket=`` directories,
+  appends its rows, books them from a partition-pruned read of those
+  directories, and only then appends the metrics rows that commit
+  them. A crash anywhere before the metrics write leaves the buckets
+  uncommitted, and the retry rewrites them instead of appending its
+  rows next to the crashed attempt's; a committed bucket is never
+  touched.
 * Books merge: counts add, checksums bit_xor, drop histograms add.
   ``merge_books`` is that merge, on the driver, and every place that
   combines per-bucket books uses it: a near-dup run folds its drop
@@ -63,10 +72,10 @@ from .pipeline import (
     near_dup_losers,
     output_columns,
     quality_pipeline,
-    stage_deduped_pages,
     with_bucket,
+    write_bucketed_pages,
 )
-from .session import local_frame
+from .session import hadoop_fs, local_frame
 
 # the row layout above as one StructType, shared by the metrics write,
 # its append-schema guard and the metrics readers
@@ -149,14 +158,26 @@ def merge_books(
             for bucket, (*counts, hist, checksum) in books.items()}
 
 
-# the columns of the output that its books read, with their types: the
-# audit reads the output with this schema instead of inferring it from
-# the footers
+# the columns of the output that its books read, with their types:
+# read_output reads the output with this schema instead of inferring it
+# from the footers
 OUTPUT_BOOKS_SCHEMA = ("bucket int, url string, keep boolean, "
                        "drop_reasons array<string>, scrubbed_text string")
 AUDIT_SCHEMA = ("bucket int, lineage_rows long, lineage_kept long, "
                 "lineage_checksum long, output_rows long, output_kept long, "
                 "output_checksum long")
+
+
+def read_output(
+    spark: SparkSession, output_path: str, dedup: bool = False
+) -> DataFrame:
+    """The book columns of the output (OUTPUT_BOOKS_SCHEMA, plus
+    dup_count for a dedup run's commit), read with that schema: no
+    footer inference, and a filter on ``bucket`` prunes whole
+    ``bucket=`` directories. The commit and the audit both read the
+    output through it."""
+    return spark.read.schema(OUTPUT_BOOKS_SCHEMA + (
+        ", dup_count long" if dedup else "")).parquet(output_path)
 
 
 def audit_lineage(
@@ -176,7 +197,9 @@ def audit_lineage(
     on the driver. Lineage side: every snapshot's rows merged per
     bucket (merge_books), which also folds in the counts-only rows a
     near-dup run commits. Output side: one bucket_summary of the
-    output read with OUTPUT_BOOKS_SCHEMA, its unused aggregates pruned.
+    output (read_output), its unused aggregates pruned. The commit
+    books the files it wrote the same way, so this catches what
+    happened to the files after their commit.
     A path that was never created (a run whose rows all vanished
     before the write) has no books, so a missing output with committed
     lineage reports every lineage bucket — and nothing-vs-nothing is
@@ -186,9 +209,8 @@ def audit_lineage(
     out = {}
     if _path_exists(spark, output_path):
         out = {r.bucket: (r.input_count, r.kept_count, r.checksum)
-               for r in bucket_summary(
-                   spark.read.schema(OUTPUT_BOOKS_SCHEMA).parquet(output_path)
-               ).select("bucket", "input_count", "kept_count", "checksum")
+               for r in bucket_summary(read_output(spark, output_path))
+               .select("bucket", "input_count", "kept_count", "checksum")
                .collect()}
     none = (None, None, None)
     bad = []
@@ -202,15 +224,31 @@ def audit_lineage(
 
 
 def _path_exists(spark: SparkSession, path: str) -> bool:
-    """Existence check through the Hadoop FileSystem API so it works
-    for ANY storage URI (hdfs://, s3a://, file:, plain local) — a bare
+    """Existence check through session.hadoop_fs: a bare
     os.path.exists is always False for remote URIs, which would
     silently disable the resume filter and the schema guard exactly
     where a real cluster runs."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jpath = hadoop_fs(spark, path)
     return bool(fs.exists(jpath))
+
+
+def _delete_owned_buckets(
+    spark: SparkSession, output_path: str, done: list[int]
+) -> None:
+    """Delete the ``bucket=`` directories of the output whose bucket
+    is not in ``done`` (the committed ids), through session.hadoop_fs
+    so any storage URI works. Those are the buckets a run owns: what
+    they hold is a crashed attempt's uncommitted rows, which the run
+    replaces. Committed buckets and non-bucket entries stay."""
+    fs, root = hadoop_fs(spark, output_path)
+    if not fs.exists(root):
+        return
+    keep = {f"bucket={b}" for b in done}
+    for st in fs.listStatus(root):
+        name = st.getPath().getName()
+        if (st.isDirectory() and name.startswith("bucket=")
+                and name not in keep):
+            fs.delete(st.getPath(), True)
 
 
 def _check_append_schema(
@@ -354,16 +392,17 @@ def resume_frames(
         # loser anti-join
         deduped = exact_dedup_pages(pages, n_buckets) if dedup else pages
         if stage_path is not None:
-            # crawl-scale staging (VERDICT r4 #3): materialize the
-            # deduped frame once instead of persisting html+text in
-            # executor memory; each consumer below then plans a plain
-            # bucketed scan of the written table (asserted in
-            # tests/test_dedup_job.py::test_staged_near_dup_plans)
-            staged = stage_deduped_pages(
-                spark, deduped,
-                "lgid_stage_" + hashlib.md5(
-                    stage_path.encode()).hexdigest()[:10],
-                stage_path, n_buckets)
+            # crawl-scale staging: write the deduped frame once as a
+            # bucketed table instead of persisting html+text in executor
+            # memory. Each consumer below then plans a plain bucketed
+            # scan pruned to its own columns — the loser scan reads no
+            # html, the UDF pass no text — where a persist holds both,
+            # spills, and replays nothing cheaper; the table doubles as
+            # the committed dedup table (register_bucketed_pages)
+            table = "lgid_stage_" + hashlib.md5(
+                stage_path.encode()).hexdigest()[:10]
+            write_bucketed_pages(deduped, table, n_buckets, path=stage_path)
+            staged = spark.table(table)
         else:
             staged = cached = deduped.persist()
         losers = near_dup_losers(
@@ -429,16 +468,29 @@ def run_incremental(
     the two append-schema guards, one read of the committed bucket ids
     and one probe — no dedup exchange, no fused UDF, no model
     broadcast. Rows of committed buckets are filtered out of the raw
-    input before anything else (resume_frames). The lineage rows (at
-    most N) are collected once; the output is written first, one file
-    per bucket (rebalanced by bucket before partitionBy), then the
-    rows as one metrics file, built through Arrow (session.local_frame)
-    so the commit runs no Python worker. A crash between the output
-    write and the metrics write leaves those buckets uncommitted: the
-    retry processes them again and APPENDS their rows a second time,
-    and audit_lineage reports each such bucket (output rows twice the
-    lineage rows). Downstream readers must key on the metrics table
-    (write-ahead commit; with real Iceberg both writes share one
+    input before anything else (resume_frames).
+
+    Otherwise the run owns every bucket not in the metrics table and
+    commits write-ahead, in this order:
+
+    1. delete the owned buckets' ``bucket=`` directories (what they
+       hold is a crashed attempt's uncommitted rows);
+    2. append the labelled rows once, one file per bucket (rebalanced
+       by bucket before partitionBy);
+    3. book them: lineage_rows over read_output of the owned buckets,
+       a partition-pruned read of the files just written, collected
+       once (at most N rows);
+    4. append those rows as one metrics file, built through Arrow
+       (session.local_frame) so the commit runs no Python worker.
+
+    Nothing is persisted on the way: the UDF output is computed once,
+    by the write. The books come from the files, as the audit's do,
+    and their balance (input = processed + dedup_dropped +
+    near_dup_dropped) checks the write. A crash anywhere before step 4
+    — between the two writes or inside the output commit — leaves the
+    buckets uncommitted, and the retry's step 1 clears them, so the
+    output never holds a bucket twice. Downstream readers key on the
+    metrics table (with real Iceberg both writes share one
     transaction).
 
     Dedup runs BEFORE the expensive Arrow UDF pass (round 4):
@@ -458,7 +510,7 @@ def run_incremental(
       deduped frame is shared by the loser scan and the UDF pass:
       by default via persist() (spillable — the small-corpus shape);
       with ``stage_path`` it is instead WRITTEN once as a bucketed
-      table (pipeline.stage_deduped_pages) and both consumers read it
+      table (pipeline.write_bucketed_pages) and both consumers read it
       back as plain column-pruned FileScans — the crawl-scale shape,
       where the written table doubles as the committed dedup table.
 
@@ -480,13 +532,8 @@ def run_incremental(
         stage_path=stage_path)
     if todo is None:
         return {"processed_rows": 0, "processed_buckets": 0}
-    # cache: the lineage aggregate and the output write share the
-    # expensive UDF pass
-    labelled = todo.labelled.persist()
     try:
-        rows = lineage_rows(labelled, snapshot_id).collect()
-        n_rows = sum(r.input_count for r in rows)
-        # write-ahead: the output lands before the metrics that commit it.
+        _delete_owned_buckets(spark, output_path, done)
         # Rebalance by bucket first: a UDF task holds rows of every
         # bucket, so partitionBy alone writes one file per (task,
         # bucket). After the rebalance each bucket sits in one reducer
@@ -495,12 +542,15 @@ def run_incremental(
         # crawl-scale bucket still writes in parallel. Only output rows
         # cross this exchange, after the UDF pass has run on the
         # url-hash partitions of the dedup stage.
-        if n_rows:
-            (
-                labelled.hint("rebalance", "bucket").write.mode("append")
-                .partitionBy("bucket")
-                .parquet(output_path)
-            )
+        (
+            todo.labelled.hint("rebalance", "bucket").write.mode("append")
+            .partitionBy("bucket")
+            .parquet(output_path)
+        )
+        rows = lineage_rows(
+            read_output(spark, output_path, dedup)
+            .where(~F.col("bucket").isin(done)), snapshot_id).collect()
+        n_rows = sum(r.input_count for r in rows)
         if near_dup:
             # the near-dup books merge into the summary rows as
             # counts-only rows of two kinds:
@@ -527,6 +577,5 @@ def run_incremental(
             )
         return {"processed_rows": n_rows, "processed_buckets": len(rows)}
     finally:
-        labelled.unpersist()
         if todo.cached is not None:
             todo.cached.unpersist()

@@ -14,8 +14,10 @@ Stages of the crawl filter job (lineage.run_incremental composes them):
                 byte-identical to the oracle
             ──▶ drop_reasons / keep (SQL array assembly)
             ──▶ optional host blocklist (broadcast dimension join)
-            ──▶ sink: rebalance by bucket, then partitionBy("bucket")
-                (lineage.run_incremental) — one file per bucket a run
+            ──▶ sink (lineage.run_incremental): delete the run's
+                uncommitted bucket= dirs, rebalance by bucket, append
+                partitionBy("bucket") — one file per bucket a run —
+                then book the lineage from a pruned read of those dirs
 
 Design notes for 100 TB:
   * Everything between the dedup exchange and the sink's rebalance is
@@ -44,6 +46,7 @@ from pyspark.sql import types as T
 
 from .lexicons import ALLOWED_LANGS
 from .oracle import reference as R
+from .session import hadoop_fs
 
 # (?U) pins Java regex to Unicode character classes so \s behaves like
 # Python's re.UNICODE when the near-dup stage splits text into words.
@@ -487,8 +490,8 @@ def write_bucketed_pages(
 
     Spark bucketing (`bucketBy` + `saveAsTable`) records the layout in
     the catalog; the Iceberg equivalent is `bucket(N, url_canon)`
-    partition transforms. See exact_dedup_bucketed for the
-    exchange-free consumer."""
+    partition transforms. exact_dedup_pages over ``spark.table`` of it
+    is the exchange-free consumer."""
     canon = pages.withColumn("url_canon", canonical_url(F.col("url")))
     # repartition ON the bucket key before the bucketed write: Spark's
     # bucket id and repartition(n, col) use the same Murmur3 hash, so
@@ -506,56 +509,12 @@ def write_bucketed_pages(
     writer.saveAsTable(table_name)
 
 
-def stage_deduped_pages(
-    spark: SparkSession,
-    pages: DataFrame,
-    table_name: str,
-    path: str,
-    n_buckets: int = N_BUCKETS_DEFAULT,
-) -> DataFrame:
-    """Materialize a (post-dedup) pages frame as a bucketed table and
-    return the READ-BACK frame (VERDICT r4 #3 — the 100-TB near-dup
-    staging shape).
-
-    run_incremental's --near-dup path has two consumers of the deduped
-    frame: the MinHash/Jaccard loser scan and the fused UDF pass. The
-    small-corpus default shares it via persist(), but at crawl scale a
-    persist of html+text is executor-memory/spill pressure the job
-    doesn't need: writing the frame ONCE (bucketed by url_canon,
-    reusing write_bucketed_pages' layout) gives every consumer a plain
-    column-pruned bucketed FileScan — the loser branch reads only
-    (url, bucket, text), the UDF pass only (url, warc_ts, html, …) —
-    instead of a recompute or a spilled cache. The written table is
-    also exactly the committed dedup table a real deployment keeps
-    (and can later re-attach with register_bucketed_pages)."""
-    write_bucketed_pages(pages, table_name, n_buckets, path=path)
-    return spark.table(table_name)
-
-
-def exact_dedup_bucketed(
-    spark: SparkSession,
-    table_name: str,
-    n_buckets: int = N_BUCKETS_DEFAULT,
-) -> DataFrame:
-    """Exchange-free exact dedup over a table written by
-    write_bucketed_pages: the catalog knows rows are hash-distributed
-    by url_canon, so the min-struct winner aggregate runs entirely
-    within each bucket's files — ZERO shuffle, asserted by
-    tests/test_plans.py. This is the shape the one-off
-    exact_dedup_pages shuffle converges to once the crawl table itself
-    is bucketed (first write pays the exchange once; every downstream
-    dedup/backfill is free)."""
-    return exact_dedup_pages(spark.table(table_name), n_buckets)
-
-
 def _bucket_file_ids(spark: SparkSession, path: str) -> list[int]:
     """Bucket ids parsed from the writer's file names (…_NNNNN.c000…)
     at ``path``, via the Hadoop FS API so hdfs://s3a:// paths work."""
     import re
 
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    fs, hpath = hadoop_fs(spark, path)
     ids = []
     for st in fs.listStatus(hpath):
         m = re.search(r"_(\d{5})\.", st.getPath().getName())

@@ -22,17 +22,18 @@ _DEFAULTS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Let AQE re-plan a persisted plan too. lineage.run_incremental
-    # persists the UDF output, and with Spark's default (false) the
-    # cached plan's final shuffle — the dedup exchange that feeds the
-    # fused UDF — is never coalesced: 2000 docs ran as 32 UDF tasks,
-    # each paying a fixed median 0.36-0.46 s ("time to initialize
-    # Python workers"), 14.5-18 executor-s in all. Coalesced it is 1
-    # task (0.9-1.3 executor-s), and a warm run_incremental on
-    # synth:2000 went 8.6-9.4 s → 4.8-5.7 s (4-core host, one window).
-    # AQE still keeps defaultParallelism partitions once the shuffle
-    # outgrows its minimum partition size: synth:20000 runs the UDF in
-    # 4 tasks on local[4] (was 32), so a UDF-bound input stays
+    # Let AQE re-plan a persisted plan too. With Spark's default
+    # (false) a cached plan's final shuffle is never coalesced, so
+    # every stage that reads the cache runs one task per
+    # spark.sql.shuffle.partitions. The filter job's own persist is
+    # --near-dup's deduped frame (lineage.resume_frames), which feeds
+    # the loser scan and the fused UDF: a --near-dup run of synth:2000
+    # took 100.1 s without this and 64.9 s with it (4-core host, one
+    # window), and its UDF stage, otherwise 32 tasks each paying a
+    # fixed ~0.4 s "time to initialize Python workers", runs in one.
+    # The classify and LM persists (classify.py) read the same way.
+    # AQE still keeps defaultParallelism partitions once a shuffle
+    # outgrows its minimum partition size, so a UDF-bound input stays
     # parallel.
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     # Bounds the partition directories a driver lists itself before it
@@ -120,6 +121,15 @@ def apply_engine_defaults(spark: SparkSession) -> None:
                 spark.conf.set(k, v)
             except Exception:
                 pass  # non-runtime-settable under this deployment
+
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path) of ``path`` through the Hadoop API, so file
+    operations work for ANY storage URI (hdfs://, s3a://, file:, plain
+    local) — os.path sees only local paths and is always False for a
+    remote URI."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
 def local_frame(

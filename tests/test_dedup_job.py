@@ -641,12 +641,12 @@ def test_staged_near_dup_plans(spark, tmp_path):
     plain column-pruned parquet scan of the staged table — no replay
     of the dedup aggregate, no scan of the original input, no
     Exchange, nothing cached."""
-    from lgid_spark.pipeline import stage_deduped_pages
+    from lgid_spark.pipeline import write_bucketed_pages
 
     pages = exact_dedup_pages(_near_dup_corpus(spark), N_BUCKETS)
-    staged = stage_deduped_pages(
-        spark, pages, "lgid_stage_plan_test", str(tmp_path / "stage"),
-        N_BUCKETS)
+    write_bucketed_pages(pages, "lgid_stage_plan_test", N_BUCKETS,
+                         path=str(tmp_path / "stage"))
+    staged = spark.table("lgid_stage_plan_test")
 
     def plan_of(df):
         return df._jdf.queryExecution().executedPlan().toString()

@@ -305,15 +305,26 @@ def test_append_schema_guard(spark, paths):
 def test_path_exists_handles_uri_schemes(spark, tmp_path):
     """Review r4: existence checks go through the Hadoop FileSystem API
     so scheme-qualified URIs work (os.path.exists is always False for
-    them, which silently disabled resume + the schema guard)."""
-    from lgid_spark.lineage import _path_exists
+    them, which silently disabled resume + the schema guard). The
+    owned-bucket delete uses the same handle: on a file:// URI it
+    removes the uncommitted bucket dirs and nothing else."""
+    from lgid_spark.lineage import _delete_owned_buckets, _path_exists
 
     p = tmp_path / "ds"
     assert not _path_exists(spark, f"file://{p}")
     assert not _path_exists(spark, str(p))
+    _delete_owned_buckets(spark, f"file://{p}", [])  # nothing to delete
     p.mkdir()
     assert _path_exists(spark, f"file://{p}")
     assert _path_exists(spark, str(p))
+
+    for b in (0, 1, 12):
+        (p / f"bucket={b}").mkdir()
+        (p / f"bucket={b}" / "part-0.parquet").write_bytes(b"x")
+    (p / "_SUCCESS").write_bytes(b"")
+    _delete_owned_buckets(spark, f"file://{p}", [1, 5])
+    assert sorted(os.listdir(p)) == ["_SUCCESS", "bucket=1"]
+    assert os.listdir(p / "bucket=1") == ["part-0.parquet"]
 
 
 def test_audit_lineage_sound_and_detects_divergence(spark, paths, tmp_path):
@@ -382,18 +393,36 @@ def test_audit_lineage_sound_and_detects_divergence(spark, paths, tmp_path):
     assert r["lineage_checksum"] != r["output_checksum"]
 
 
-def test_crash_between_output_and_metrics_write(spark, paths,
+def _per_url(spark, out):
+    """The output as {url: row dict}, bucket included."""
+    return {r["url"]: r.asDict() for r in spark.read.parquet(out).collect()}
+
+
+def _uninterrupted(spark, tmp_path, pages):
+    """Output and metrics paths of an uninterrupted run over ``pages``."""
+    ref_out, ref_met = str(tmp_path / "ref_out"), str(tmp_path / "ref_met")
+    run_incremental(spark, pages, ref_out, ref_met, "ref", N_BUCKETS)
+    return ref_out, ref_met
+
+
+def _assert_equals(spark, out, metrics, ref_out, ref_met):
+    """The output audits clean, and its books and per-url rows equal
+    the reference run's."""
+    from lgid_spark.lineage import audit_lineage
+
+    assert audit_lineage(spark, out, metrics).count() == 0
+    assert _books(spark, metrics) == _books(spark, ref_met)
+    assert _per_url(spark, out) == _per_url(spark, ref_out)
+
+
+def test_crash_between_output_and_metrics_write(spark, paths, tmp_path,
                                                 monkeypatch):
     """Fault injection in the commit's crash window: the output write
     lands and the run dies before the metrics write. The retry finds
-    nothing committed, processes every bucket again and APPENDS its
-    rows a second time, and the audit names every re-appended bucket
-    with twice its lineage rows in the output. Writing the todo
-    buckets with dynamic partition overwrite (ROADMAP item 4) turns
-    this expectation into an empty audit."""
+    nothing committed, so it owns every bucket: it deletes the crashed
+    attempt's bucket dirs and rewrites them, and the output, the books
+    and the audit equal an uninterrupted run's."""
     from pyspark.sql.readwriter import DataFrameWriter
-
-    from lgid_spark.lineage import audit_lineage
 
     out, metrics = paths
     parquet = DataFrameWriter.parquet
@@ -409,17 +438,33 @@ def test_crash_between_output_and_metrics_write(spark, paths,
         run_incremental(spark, pages, out, metrics, "crashed", N_BUCKETS)
     monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
     assert not os.path.exists(metrics)
-    first = spark.read.parquet(out).count()
-    assert first == 120
+    assert spark.read.parquet(out).count() == 120
 
     r = run_incremental(spark, pages, out, metrics, "retry", N_BUCKETS)
     assert r == {"processed_rows": 120, "processed_buckets": N_BUCKETS}
-    assert spark.read.parquet(out).count() == 2 * first
-    bad = audit_lineage(spark, out, metrics).collect()
-    assert len(bad) == N_BUCKETS
-    for row in bad:
-        assert row["output_rows"] == 2 * row["lineage_rows"] > 0
-        assert row["output_kept"] == 2 * row["lineage_kept"]
+    assert spark.read.parquet(out).count() == 120
+    _assert_equals(spark, out, metrics,
+                   *_uninterrupted(spark, tmp_path, pages))
+
+
+def test_crash_during_output_commit(spark, paths, tmp_path):
+    """A kill in the middle of the output commit: some bucket dirs of
+    the run have landed, the rest and the metrics have not. The resume
+    owns every bucket, so it replaces the landed dirs instead of
+    appending next to them."""
+    out, metrics = paths
+    pages = spark_web_pages(spark, 120)
+    ref_out, ref_met = _uninterrupted(spark, tmp_path, pages)
+    landed = sorted(d for d in os.listdir(ref_out)
+                    if d.startswith("bucket="))[::2]
+    assert landed
+    for d in landed:
+        shutil.copytree(os.path.join(ref_out, d), os.path.join(out, d))
+
+    r = run_incremental(spark, pages, out, metrics, "resume", N_BUCKETS)
+    assert r == {"processed_rows": 120, "processed_buckets": N_BUCKETS}
+    assert spark.read.parquet(out).count() == 120
+    _assert_equals(spark, out, metrics, ref_out, ref_met)
 
 
 def test_audit_runs_no_join(spark, paths, monkeypatch):
@@ -447,6 +492,54 @@ def test_audit_runs_no_join(spark, paths, monkeypatch):
     for plan in plans + [
             audit._jdf.queryExecution().executedPlan().toString()]:
         assert "Join" not in plan, plan
+
+
+@pytest.mark.parametrize("kw", [{}, {"dedup": False}, {"near_dup": True}],
+                         ids=["dedup", "no_dedup", "near_dup"])
+def test_filter_path_persists_nothing(spark, paths, monkeypatch, kw):
+    """The run books its lineage from the files it wrote, so the UDF
+    output is computed once, by the write, and never cached: on the
+    dedup and --no-dedup paths no persist is called and no plan the
+    run executes (its collects and writes) scans a cache. Near-dup's
+    deduped frame, shared by the loser scan and the UDF pass, is the
+    one persist left."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    DataFrame = type(spark.range(1))  # the concrete (classic) class
+    persist, collect = DataFrame.persist, DataFrame.collect
+    parquet = DataFrameWriter.parquet
+    plans: list[str] = []
+    persists: list[DataFrame] = []
+
+    def plan_of(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    def spy_persist(self, *a, **k):
+        persists.append(self)
+        return persist(self, *a, **k)
+
+    def spy_collect(self):
+        plans.append(plan_of(self))
+        return collect(self)
+
+    def spy_parquet(self, path, *a, **k):
+        plans.append(plan_of(self._df))
+        return parquet(self, path, *a, **k)
+
+    monkeypatch.setattr(DataFrame, "persist", spy_persist)
+    monkeypatch.setattr(DataFrame, "collect", spy_collect)
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy_parquet)
+    out, metrics = paths
+    r = run_incremental(spark, spark_web_pages(spark, 120), out, metrics,
+                        "snap1", N_BUCKETS, **kw)
+    assert r["processed_rows"] > 0
+    assert len(plans) >= 3  # the output write, the books, the metrics
+    if kw.get("near_dup"):
+        assert len(persists) == 1
+    else:
+        assert persists == []
+        for plan in plans:
+            assert "InMemoryTableScan" not in plan, plan
 
 
 def _books(spark, metrics):
@@ -518,8 +611,15 @@ def test_crash_resume_equals_uninterrupted(spark, tmp_path, mode):
             shutil.copytree(src, out / src.name)
     (spark.read.parquet(ref_met).where(F.col("bucket").isin(committed))
      .write.parquet(met))
+
+    def committed_files():
+        return {d: sorted(os.listdir(out / d)) for d in os.listdir(out)
+                if d.startswith("bucket=") and int(d[7:]) in committed}
+
+    before = committed_files()
     res = run_incremental(spark, pages, str(out), met, "resume",
                           N_BUCKETS, **kw)
+    assert committed_files() == before  # the resume never touches them
     ref_rows = spark.read.parquet(ref_out)
     assert res["processed_rows"] == ref_rows.where(
         ~F.col("bucket").isin(committed)).count() > 0
@@ -580,16 +680,22 @@ def _run_in_group(spark, group, fn):
     return jobs, stages
 
 
-def test_udf_stage_is_coalesced_by_aqe(spark, paths):
-    """run_incremental persists the UDF output; AQE must still coalesce
-    the dedup exchange inside that cached plan, so a small input runs
-    the fused UDF in fewer tasks than spark.sql.shuffle.partitions
-    (one Python-worker init per task)."""
+@pytest.mark.parametrize("near_dup", [False, True],
+                         ids=["dedup", "near_dup"])
+def test_udf_stage_is_coalesced_by_aqe(spark, paths, near_dup):
+    """A small input runs the fused UDF in fewer tasks than
+    spark.sql.shuffle.partitions (one Python-worker init per task).
+    The --near-dup run persists its deduped frame, which feeds the
+    UDF: AQE must still coalesce the dedup exchange inside that cached
+    plan, which it does only with
+    spark.sql.optimizer.canChangeCachedPlanOutputPartitioning (that
+    case fails without it). The dedup path persists nothing."""
     out, metrics = paths
     pages = spark_web_pages(spark, N)
     _, stages = _run_in_group(
         spark, "lgid_udf_stage", lambda: run_incremental(
-            spark, pages, out, metrics, "snap1", N_BUCKETS))
+            spark, pages, out, metrics, "snap1", N_BUCKETS,
+            near_dup=near_dup))
     udf_tasks = [n for n, udf in stages.values() if udf]
     assert udf_tasks, stages
     shuffle_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))

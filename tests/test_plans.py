@@ -261,18 +261,14 @@ def test_bucketed_table_dedup_is_exchange_free(spark, tmp_path):
     layout replaces the shuffle. Results must equal the shuffling
     one-off stage on the same data."""
     from lgid_spark.datagen import spark_web_pages_with_dups
-    from lgid_spark.pipeline import (
-        exact_dedup_bucketed,
-        exact_dedup_pages,
-        write_bucketed_pages,
-    )
+    from lgid_spark.pipeline import exact_dedup_pages, write_bucketed_pages
 
     pages = spark_web_pages_with_dups(spark, 120)
     table = "bucketed_pages_plan_test"
     try:
         write_bucketed_pages(
             pages, table, n_buckets=8, path=str(tmp_path / "tbl"))
-        deduped = exact_dedup_bucketed(spark, table, n_buckets=8)
+        deduped = exact_dedup_pages(spark.table(table), 8)
         plan = deduped._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan  # bucket layout replaces the shuffle
         assert plan.count("HashAggregate") >= 1 or "SortAggregate" in plan
